@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import cells, geometry
-from .spatial_join import FULL, PARTIAL, _pip_udf, fixture_rings
+from .spatial_join import FULL, PARTIAL, keep_inside, with_edges
 
 DEFAULT_MIN_RES = 3
 DEFAULT_MAX_RES = 6
@@ -219,14 +219,10 @@ def pip_attribute_hier(
     """PIP attribution against the mixed-resolution cover: each point
     explodes to its cell id at every level (pure column math), one
     broadcast equi-join, exact kernel only on PARTIAL leaves."""
-    rings = rings or fixture_rings()
+    idx, k = with_edges(hier_index, rings)
     level_cells = F.array(
         *[F.expr(cells.cell_sql("lon", "lat", r)) for r in range(min_res, max_res + 1)]
     )
     pts = points.withColumn("cell_id", F.explode(level_cells))
-    cand = pts.join(F.broadcast(hier_index), "cell_id")
-    inside = _pip_udf(rings)
-    keep = inside(
-        F.col("poly_id"), F.col("lon"), F.col("lat"), F.col("coverage") == FULL
-    )
-    return cand.filter(keep).drop("coverage")
+    cand = pts.join(F.broadcast(idx), "cell_id")
+    return keep_inside(cand, k)

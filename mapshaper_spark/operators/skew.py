@@ -31,7 +31,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .spatial_join import DEFAULT_RES, FULL, _pip_udf, fixture_rings, with_cell
+from .spatial_join import DEFAULT_RES, keep_inside, with_cell, with_edges
 
 
 def cell_salt_factors(
@@ -135,7 +135,7 @@ def pip_attribute_salted(
     (e.g. the raw column-pruned scan when ``points`` sits downstream of
     an expensive map stage — sampling cannot push through a UDF).
     """
-    rings = rings or fixture_rings()
+    idx, k = with_edges(cell_index, rings)
     pts = with_cell(points, res)
     stats_src = with_cell(stats_points, res) if stats_points is not None else pts
     factors = cell_salt_factors(
@@ -144,13 +144,5 @@ def pip_attribute_salted(
     # hint shuffle_hash: keep it a shuffled (not broadcast) join so the
     # salting is actually exercised; at production scale Spark would pick
     # this shape on its own once the index exceeds the broadcast limit.
-    cand = salted_equi_join(
-        pts, cell_index.hint("shuffle_hash"), "cell_id", factors, "point_id"
-    )
-    inside = _pip_udf(rings)
-    # single filter; FULL rows short-circuit inside the kernel
-    # [see spatial_join._pip_udf]
-    keep = inside(
-        F.col("poly_id"), F.col("lon"), F.col("lat"), F.col("coverage") == FULL
-    )
-    return cand.filter(keep).drop("coverage")
+    cand = salted_equi_join(pts, idx.hint("shuffle_hash"), "cell_id", factors, "point_id")
+    return keep_inside(cand, k)

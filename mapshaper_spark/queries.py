@@ -115,8 +115,9 @@ def q_cell_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_pip_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-in-polygon attribution via the two-phase cell join: FULL
-    cells skip geometry entirely; PARTIAL cells run the vectorized PIP
-    kernel. The oracle is an independent all-pairs half-plane test."""
+    cells skip geometry entirely; PARTIAL cells run the codegen'd
+    half-plane filter. The oracle is an independent all-pairs half-plane
+    test."""
     pts = testdata.customer_points(spark, sf_dir)
     polys = testdata.polygons(spark)
     idx = sj.build_cell_index(spark, polys)
@@ -647,7 +648,7 @@ def q_simplify_pct(spark: SparkSession, sf_dir: str) -> DataFrame:
     (percentile_approx cut is engine-specific); pytest asserts the
     monotonicity invariant n_kept(80) >= n_kept(50) >= n_kept(20)."""
     arcs = topology.arcs_df(spark, fixtures.POLYLINES)
-    thr = simplify_op.compute_thresholds(arcs, "visvalingam").cache()
+    thr = simplify_op.compute_thresholds(arcs, "visvalingam").localCheckpoint()
     outs = []
     for pct in (0.8, 0.5, 0.2):
         t = simplify_op.threshold_for_pct(thr, pct)

@@ -1,5 +1,9 @@
 #!/usr/bin/env python
-"""Regenerate PLANS.md: formatted physical plans of the graded core."""
+"""Regenerate PLANS.md: formatted physical plans of the graded core.
+
+``python scripts/dump_plans.py`` rewrites the whole file;
+``python scripts/dump_plans.py NAME ...`` regenerates only those
+sections in place."""
 
 from __future__ import annotations
 
@@ -63,7 +67,11 @@ NAMES = (
 )
 
 
-def main() -> None:
+def main(names: tuple[str, ...] = NAMES) -> None:
+    """Dump every plan in NAMES, or only ``names`` into the existing file."""
+    unknown = set(names) - set(NAMES)
+    if unknown:
+        raise SystemExit(f"not in NAMES: {sorted(unknown)}")
     spark = get_spark("plans", cpus=8, shuffle_partitions=8)
     sf = "/root/testdata/sf0.01"
     out = [
@@ -87,16 +95,28 @@ def main() -> None:
         "by scripts/points_scale_probe.py over a 1M-arc range instead.",
     ]
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    for name in NAMES:
+    sections = {}
+    for name in names:
         df = Q.QUERIES[name](spark, sf)
-        out.append(f"\n## {name}\n\n```")
-        out.append(df._jdf.queryExecution().explainString(mode))
-        out.append("```")
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(root, "PLANS.md"), "w") as f:
-        f.write("\n".join(out) + "\n")
+        sections[name] = f"\n## {name}\n\n```\n{df._jdf.queryExecution().explainString(mode)}\n```"
     spark.stop()
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    path = os.path.join(root, "PLANS.md")
+    if names != NAMES:
+        # splice the named sections into the existing file, keep the rest
+        with open(path) as f:
+            text = f.read()
+        for name, sec in sections.items():
+            head = f"\n## {name}\n"
+            start = text.index(head)
+            end = text.find("\n## ", start + len(head))
+            text = text[:start] + sec + "\n" + (text[end:] if end >= 0 else "")
+        with open(path, "w") as f:
+            f.write(text)
+        return
+    with open(path, "w") as f:
+        f.write("\n".join(out + list(sections.values())) + "\n")
 
 
 if __name__ == "__main__":
-    main()
+    main(tuple(sys.argv[1:]) or NAMES)

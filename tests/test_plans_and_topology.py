@@ -7,6 +7,7 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from mapshaper_spark import fixtures, queries as Q
+from mapshaper_spark.operators import hier_cover as hier_op
 from mapshaper_spark.operators import skew as skew_op
 from mapshaper_spark.operators import spatial_join as sj
 from mapshaper_spark.operators import topology
@@ -17,6 +18,12 @@ from .conftest import SF_SMOKE
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _assert_no_python_eval(plan: str) -> None:
+    # convex PIP is a codegen'd JVM predicate: no per-row Python UDF node
+    assert "ArrowEvalPython" not in plan
+    assert "BatchEvalPython" not in plan
 
 
 def test_bbox_filter_pushed_to_parquet_scan(spark):
@@ -31,6 +38,15 @@ def test_pip_uses_broadcast_join(spark):
     idx = sj.build_cell_index(spark, testdata.polygons(spark))
     plan = _plan(sj.pip_attribute(pts, idx))
     assert "BroadcastHashJoin" in plan
+    _assert_no_python_eval(plan)
+
+
+def test_hier_pip_has_no_python_eval(spark):
+    pts = testdata.customer_points(spark, SF_SMOKE)
+    idx = hier_op.build_cell_index_hier(spark, testdata.polygons(spark))
+    plan = _plan(hier_op.pip_attribute_hier(pts, idx))
+    assert "BroadcastHashJoin" in plan
+    _assert_no_python_eval(plan)
 
 
 def test_salted_pip_shuffles_and_salts(spark):
@@ -42,6 +58,7 @@ def test_salted_pip_shuffles_and_salts(spark):
     # carries the salt column
     assert "ShuffledHashJoin" in plan or "SortMergeJoin" in plan
     assert "_salt" in plan
+    _assert_no_python_eval(plan)
     # hotspot cells must actually be salted (sf0.001 has ~10 points per
     # hotspot cell, so measure with a matching threshold)
     wc = sj.with_cell(pts)

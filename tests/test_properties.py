@@ -1161,3 +1161,71 @@ def test_gap_fill_matches_clean_plus_hole(p):
     assert got[0] == pytest.approx(base[0], abs=tol)
     assert got[1] == pytest.approx(base[1], abs=tol)
     assert got[2] == pytest.approx(base[2] + hole_area, abs=tol)
+
+
+_convex_layer = st.tuples(
+    st.lists(st.integers(min_value=3, max_value=64), min_size=0, max_size=3),
+    st.floats(min_value=0.5, max_value=40.0),      # radius
+    st.floats(min_value=-120.0, max_value=120.0),  # center x
+    st.floats(min_value=-60.0, max_value=60.0),    # center y
+    st.integers(min_value=0, max_value=2**32 - 1),  # angle / point seed
+)
+
+
+@settings(max_examples=25, deadline=None)
+@given(_convex_layer)
+@example(p=([], 1.0, 0.0, 0.0, 0))
+def test_convex_pip_filter_matches_pip_convex(p):
+    """The JVM half-plane filter of the convex PIP path equals
+    ``geometry.pip_convex`` row for row. One layer holds a triangle, a
+    64-gon and 0-3 more convex rings, so short rings are padded against
+    a large K. Points include exact vertices, edge midpoints, random
+    points around each ring, and NaN / ±inf coordinates, all in PARTIAL
+    cells; FULL rows must pass untested."""
+    from mapshaper_spark.operators import spatial_join as sj
+    from mapshaper_spark.session import get_spark
+
+    sizes, r, cx, cy, seed = p
+    rng = np.random.Generator(np.random.PCG64(seed))
+    rings = {}
+    for pid, n in enumerate([3, 64, *sizes]):
+        # distinct sorted angles on a circle: convex and CCW
+        ang = np.sort(rng.choice(4096, size=n, replace=False)) * (2.0 * np.pi / 4096)
+        rr = r * (0.5 + pid / 4.0)
+        rings[pid] = np.column_stack([cx + rr * np.cos(ang), cy + rr * np.sin(ang)])
+    special = [np.nan, np.inf, -np.inf]
+    px, py = [], []
+    for ring in rings.values():
+        mid = (ring + np.roll(ring, -1, axis=0)) / 2.0
+        rnd = rng.uniform(-1.5, 1.5, (40, 2)) * r * 1.5 + (cx, cy)
+        for pts in (ring, mid, rnd):
+            px.extend(pts[:, 0])
+            py.extend(pts[:, 1])
+    for a in special + [cx]:
+        for b in special + [cy]:
+            if a == cx and b == cy:
+                continue
+            px.append(a)
+            py.append(b)
+    px, py = np.asarray(px), np.asarray(py)
+    pids = np.array(sorted(rings))
+    full = rng.random((len(px), len(pids))) < 0.1
+    with np.errstate(invalid="ignore"):  # inf - inf in the numpy reference
+        want = full | np.column_stack([G.pip_convex(px, py, rings[q]) for q in pids])
+
+    spark = get_spark("mapshaper_spark_tests", cpus=8, shuffle_partitions=8)
+    cand = spark.createDataFrame(
+        [
+            (i, int(q), float(px[i]), float(py[i]), sj.FULL if full[i, c] else sj.PARTIAL)
+            for i in range(len(px))
+            for c, q in enumerate(pids)
+        ],
+        "point_id int, poly_id int, lon double, lat double, coverage string",
+    )
+    with_e, k = sj.with_edges(cand, rings)
+    assert k == 64
+    got_df = sj.keep_inside(with_e, k)
+    assert got_df.columns == ["point_id", "poly_id", "lon", "lat"]
+    got = {(row["point_id"], row["poly_id"]) for row in got_df.collect()}
+    idx = np.argwhere(want)
+    assert got == {(int(i), int(pids[c])) for i, c in idx}
