@@ -133,14 +133,10 @@ BENCH_QUERIES = [
     # passes: a 256-bucket wordcount shuffle + a broadcast-map scoring
     # scan), tokenizer-training pair counts (wordcount-shaped), and
     # SemDeDup (cluster-scoped semantic dedup over the 2000-vector
-    # embeddings table at sf0.1 — the cluster-keyed pair join is the
+    # embeddings table at sf0.1 — the per-cluster Gram kernel is the
     # measured stage)
     "importance_weights_hashed",
     "bpe_pair_counts",
-    "semdedup_cluster_scoped",
-    # the Gram-kernel plan variant of the row above (same oracle, pair
-    # scan as one int64 M@M.T per cluster) — benched side-by-side so
-    # the recording shows the scale path's win on identical input
     "semdedup_kernel_scan",
     # continuation part 8: ExactSubstr span dedup (positioned-gram
     # occurrence counts + per-doc interval-merge windows — data-scaled

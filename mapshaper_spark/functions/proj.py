@@ -562,45 +562,6 @@ _MOLL_ITERS = 30  # Newton on 2θ + sin 2θ = π sin φ: quadratic away
 # 10 leave 4e-2° at 89.99° (exact-pole rows take the closed form)
 
 
-def mollweide_xy(lon0: float = 0.0):
-    """:func:`mollweide` as a column-pair builder for the zero-shuffle
-    ring-array path — the Newton solve runs as ``aggregate(sequence(1,
-    N), θ0, step)``: the SAME fixed-count iteration, but executed at
-    RUNTIME inside the lambda instead of unrolled through withColumn,
-    so the expression tree stays O(one step) while the point-table
-    form's tree is O(N steps). Each step evaluates the identical IEEE
-    expression in the identical order, so values match the explode
-    path BITWISE (pinned in pytest). The same pattern (a struct
-    accumulator) extends to 2D Newton solves (Winkel/Aitoff) if ever
-    needed."""
-
-    def fxy(lon_col, lat_col):
-        f = F.radians(lat_col)
-        tgt = F.lit(math.pi) * F.sin(f)
-
-        def step(th, _i):
-            den = F.lit(2.0) + F.lit(2.0) * F.cos(F.lit(2.0) * th)
-            return F.when(
-                den > F.lit(0.0),
-                th
-                - (F.lit(2.0) * th + F.sin(F.lit(2.0) * th) - tgt) / den,
-            ).otherwise(th)
-
-        th = F.aggregate(
-            F.sequence(F.lit(1), F.lit(_MOLL_ITERS)), f, step
-        )
-        at_pole = F.abs(lat_col) >= F.lit(90.0 - 1e-9)
-        theta = F.when(
-            at_pole, F.lit(math.pi / 2.0) * F.signum(lat_col)
-        ).otherwise(th)
-        dl = F.radians(lon_col - F.lit(lon0))
-        x = F.lit(R * 2.0 * math.sqrt(2.0) / math.pi) * dl * F.cos(theta)
-        y = F.lit(R * math.sqrt(2.0)) * F.sin(theta)
-        return x, y
-
-    return fxy
-
-
 def mollweide(
     df: DataFrame, lon0: float = 0.0, lon: str = "lon", lat: str = "lat"
 ) -> DataFrame:
@@ -688,40 +649,6 @@ _ECK4_ITERS = 30  # Newton on t + sin t cos t + 2 sin t = (2+pi/2) sin f:
 _ECK4_C = 2.0 + math.pi / 2.0
 _ECK4_XM = 2.0 / math.sqrt(4.0 * math.pi + math.pi * math.pi)
 _ECK4_YM = 2.0 * math.sqrt(math.pi / (4.0 + math.pi))
-
-
-def eckert4_xy(lon0: float = 0.0):
-    """:func:`eckert4` as a column-pair builder (zero-shuffle ring-array
-    path) — the Newton solve runs at RUNTIME via aggregate(sequence),
-    the :func:`mollweide_xy` pattern; bitwise-identical to the
-    withColumn-unrolled point-table form."""
-
-    def fxy(lon_col, lat_col):
-        f = F.radians(lat_col)
-        tgt = F.lit(_ECK4_C) * F.sin(f)
-
-        def step(t, _i):
-            den = F.lit(2.0) * F.cos(t) * (F.lit(1.0) + F.cos(t))
-            return F.when(
-                den > F.lit(0.0),
-                t
-                - (t + F.sin(t) * F.cos(t) + F.lit(2.0) * F.sin(t) - tgt)
-                / den,
-            ).otherwise(t)
-
-        t = F.aggregate(
-            F.sequence(F.lit(1), F.lit(_ECK4_ITERS)), f / F.lit(2.0), step
-        )
-        at_pole = F.abs(lat_col) >= F.lit(90.0 - 1e-9)
-        t = F.when(
-            at_pole, F.lit(math.pi / 2.0) * F.signum(lat_col)
-        ).otherwise(t)
-        dl = F.radians(lon_col - F.lit(lon0))
-        x = F.lit(_ECK4_XM * R) * dl * (F.lit(1.0) + F.cos(t))
-        y = F.lit(_ECK4_YM * R) * F.sin(t)
-        return x, y
-
-    return fxy
 
 
 def eckert4(
@@ -1572,9 +1499,8 @@ def project_layer_inplace(
     projection's column math runs INSIDE the vertex arrays as zip_with
     lambdas — no posexplode, no regroup, no exchange anywhere in the
     plan. :func:`project_layer`'s regroup shuffle dominates its cost
-    (BENCH/proj_probe.json: 10M vertices round-trip in 55 s, almost all
-    of it the two collect_list exchanges); this path is a pure map
-    stage, so at 100 TB it scales as a scan.
+    for a cheap projection; this path is a pure map stage, so at
+    100 TB it scales as a scan.
 
     ``fxy`` is a COLUMN-PAIR builder ``(lon, lat) -> (x, y)``
     (:func:`webmercator_xy`, :func:`webmercator_inv_xy`,
@@ -1584,16 +1510,15 @@ def project_layer_inplace(
     zip_with lambda and only that coordinate's expression enters the
     plan (the discarded half of the tuple never materializes).
 
-    Newton-solve projections CAN take this path too — not by inlining
-    the unrolled iteration into the lambda (that duplicates the iterate
-    subtree exponentially), but by running the fixed-count iteration at
-    RUNTIME via ``aggregate(sequence(1, N), x0, step)``
-    (:func:`mollweide_xy`, :func:`eckert4_xy` — bitwise-identical to
-    their withColumn-unrolled point-table forms, pinned). The 2D
-    Newton solves (Winkel/Aitoff inverses) ride the same pattern with
-    a STRUCT accumulator carrying the (φ, λ) iterate
-    (:func:`_newton2d_inverse_xy` — bitwise vs the point-table forms,
-    pinned).
+    Only closed-form projections take this path (the builders in
+    :data:`XY_BUILDERS`). Higher-order-function lambdas evaluate
+    interpreted, outside whole-stage codegen. A closed form still
+    breaks even or wins on the saved shuffle (BENCH/proj_probe.json,
+    4 cores, 10M vertices: WebMercator 1.45 vs 3.56 s, rotation 5.04
+    vs 4.91 s), but a Newton solve iterating inside the lambda
+    measured 2.7-9.6x slower than :func:`project_layer` at 1M
+    vertices (BENCH/BASELINE.md, part-8 proj finding), so those
+    projections stay on the explode path.
 
     All non-vertex columns pass through untouched (passthrough shape —
     no slim-ids join needed since nothing shuffles)."""
@@ -1874,121 +1799,25 @@ def hammer_inverse(
     )
 
 
-def _newton2d_inverse_xy(fwd_unit, lam0_scale: float):
-    """Zero-shuffle column-pair builders for the 2D-Newton inverses
-    (Winkel Tripel, Aitoff) — the struct-accumulator pattern
-    :func:`mollweide_xy`'s docstring promised: the fixed-count Newton
-    iteration runs at RUNTIME via ``aggregate(sequence(1, N),
-    struct(f0, l0), step)``, carrying the (φ, λ) iterate as a struct.
-    The expression tree is O(one step) — inlining the unrolled 16-step
-    iteration into a lambda would grow exponentially, which is why
-    these stayed point-path until now. Every step evaluates the
-    IDENTICAL IEEE expressions in the identical order as the
-    withColumn-unrolled point-table forms (same forward evaluations,
-    same forward-difference Jacobian, same degenerate-det skip, same
-    chart-box clamps), so values match BITWISE (pinned in pytest).
-
-    ``fwd_unit(f, l) -> (x, y)`` is the unit-sphere forward pair;
-    ``lam0_scale`` scales the initial λ guess (exact on the equator:
-    2/(1+cos φ1) for Winkel, 1 for Aitoff)."""
-
-    def make(lon0: float = 0.0):
-        def fxy(x_col, y_col):
-            X = x_col / F.lit(R)
-            Y = y_col / F.lit(R)
-            f0 = F.least(
-                F.lit(math.pi / 2.0), F.greatest(F.lit(-math.pi / 2.0), Y)
-            )
-            l0_raw = X if lam0_scale == 1.0 else X * F.lit(lam0_scale)
-            l0 = F.least(F.lit(math.pi), F.greatest(F.lit(-math.pi), l0_raw))
-            init = F.struct(f0.alias("f"), l0.alias("l"))
-
-            def step(acc, _i):
-                f, l = acc["f"], acc["l"]
-                x0, y0 = fwd_unit(f, l)
-                xf, yf = fwd_unit(f + F.lit(_WT_EPS), l)
-                xl, yl = fwd_unit(f, l + F.lit(_WT_EPS))
-                j00 = (xf - x0) / F.lit(_WT_EPS)
-                j01 = (xl - x0) / F.lit(_WT_EPS)
-                j10 = (yf - y0) / F.lit(_WT_EPS)
-                j11 = (yl - y0) / F.lit(_WT_EPS)
-                det = j00 * j11 - j01 * j10
-                r0 = X - x0
-                r1 = Y - y0
-                ok = F.abs(det) > F.lit(1e-300)
-                df_step = F.when(
-                    ok, (j11 * r0 - j01 * r1) / det
-                ).otherwise(F.lit(0.0))
-                dl_step = F.when(
-                    ok, (j00 * r1 - j10 * r0) / det
-                ).otherwise(F.lit(0.0))
-                f2 = F.least(
-                    F.lit(math.pi / 2.0),
-                    F.greatest(F.lit(-math.pi / 2.0), f + df_step),
-                )
-                l2 = F.least(
-                    F.lit(math.pi), F.greatest(F.lit(-math.pi), l + dl_step)
-                )
-                return F.struct(f2.alias("f"), l2.alias("l"))
-
-            acc = F.aggregate(
-                F.sequence(F.lit(1), F.lit(_WT_ITERS)), init, step
-            )
-            return (
-                F.degrees(acc["l"]) + F.lit(lon0),
-                F.degrees(acc["f"]),
-            )
-
-        return fxy
-
-    return make
-
-
-def winkel_tripel_inv_xy(lon0: float = 0.0):
-    """:func:`winkel_tripel_inverse` as a column-pair builder — the
-    2D-Newton struct-accumulator path; bitwise vs the point-table
-    form, pinned."""
-    return _newton2d_inverse_xy(
-        _wt_xy, 2.0 / (1.0 + math.cos(_WT_F1))
-    )(lon0)
-
-
-def aitoff_inv_xy(lon0: float = 0.0):
-    """:func:`aitoff_inverse` as a column-pair builder — the 2D-Newton
-    struct-accumulator path; bitwise vs the point-table form,
-    pinned."""
-    return _newton2d_inverse_xy(_aitoff_xy, 1.0)(lon0)
-
-
-# Closed-form projections with COLUMN-PAIR builders: callers (the
-# pipeline runner's `project`/`rotate` ops) route these through the
-# zero-shuffle :func:`project_layer_inplace`. Values are factories
-# taking the projection's parameter kwargs and returning the
-# ``fxy(lon, lat) -> (x, y)`` pair builder. Every forward AND every
-# inverse that emits a plain coordinate pair is here — the 1D Newton
-# solves iterate at runtime via aggregate(sequence) and the 2D ones
-# via a struct accumulator (:func:`_newton2d_inverse_xy`); only
-# per-row-zone UTM stays out (its zone/hemisphere outputs are
-# metadata beyond (x, y)). Any other projection joins by the same
-# mechanical refactor (share the expression tree between the
-# point-table function and the builder, as webmercator/sinusoidal/
-# rotate do).
+# Projections with a COLUMN-PAIR builder: the pipeline runner's
+# `project`/`rotate` ops run these in place through the zero-shuffle
+# :func:`project_layer_inplace`; every other projection runs through
+# :func:`project_layer`. Values are factories taking the projection's
+# parameter kwargs and returning the ``fxy(lon, lat) -> (x, y)`` pair
+# builder. Every entry is CLOSED-FORM and its point-table function
+# builds from the same builder, so both paths share one expression
+# tree. Registered: every forward except utm (its zone/hemisphere
+# outputs are metadata beyond (x, y)) and the Newton solves
+# (mollweide, eckert4); of the inverses only from_webmercator. A
+# Newton solve would iterate inside a zip_with lambda, and
+# higher-order-function lambdas evaluate interpreted (no whole-stage
+# codegen): measured 2.7-9.6x slower than the codegen'd explode path
+# at 1M vertices (BENCH/BASELINE.md, part-8 proj finding).
 XY_BUILDERS = {
     "to_webmercator": lambda: webmercator_xy,
     "from_webmercator": lambda: webmercator_inv_xy,
     "sinusoidal": sinusoidal_xy,
     "rotate_sphere": rotate_sphere_xy,
-    # Newton solves ARE expressible zero-shuffle after all: the
-    # fixed-count iteration runs at RUNTIME via aggregate(sequence(1,
-    # N), x0, step) — O(one step) expression tree, bitwise-identical
-    # values to the withColumn-unrolled point-table forms (pinned).
-    "mollweide": mollweide_xy,
-    "eckert4": eckert4_xy,
-    # every remaining FORWARD in the module (all closed-form; the
-    # point-table functions delegate to these same builders, so both
-    # paths share one expression tree). Not here: utm (per-row
-    # zone/hemisphere outputs are metadata beyond (x, y)) and the
-    # 2D-Newton inverses.
     "albers": albers_xy,
     "lambert_cc": lambert_cc_xy,
     "lambert_azimuthal": lambert_azimuthal_xy,
@@ -2007,26 +1836,4 @@ XY_BUILDERS = {
     "winkel_tripel": winkel_tripel_xy,
     "aitoff": aitoff_xy,
     "hammer": hammer_xy,
-    # the 2D-Newton inverses (struct-accumulator aggregate iteration)
-    "winkel_tripel_inverse": winkel_tripel_inv_xy,
-    "aitoff_inverse": aitoff_inv_xy,
-}
-
-# Builders whose lambda bodies ITERATE at runtime (the
-# aggregate(sequence) Newton solves). Higher-order-function lambdas
-# evaluate INTERPRETED — no whole-stage codegen — and the measured A/B
-# at 1M vertices says the codegen'd explode->regroup path beats them
-# despite paying its shuffle: mollweide 2.3 vs 6.3 s, eckert4 2.6 vs
-# 6.4 s, winkel inverse 8.1 vs 77.8 s (min-of-3 interleaved,
-# BENCH/proj_probe.json — for the cheap closed forms the ratio flips,
-# webmercator 0.22 vs 0.13 s, because there the regroup dominates).
-# The pipeline runner therefore routes these through project_layer by
-# default; the builders stay registered (bitwise-pinned) for callers
-# where avoiding the regroup shuffle matters more than per-vertex CPU
-# (network-bound clusters, fusion into a surrounding map stage).
-RUNTIME_ITERATED = {
-    "mollweide",
-    "eckert4",
-    "winkel_tripel_inverse",
-    "aitoff_inverse",
 }

@@ -126,9 +126,9 @@ def semdedup_kernel(
     integers — cos > sqrt(num/den), default 0.35) and ``keep`` is
     ``n_dups_lower == 0`` (keep-first resolution).
 
-    Semantically identical to the pairwise self-join form the oracle
-    query ``semdedup_cluster_scoped`` runs (pinned bitwise in pytest
-    and in ``scripts/semdedup_scale_probe.py``), but the pair scan
+    Semantically identical to the pairwise self-join form of the
+    ``semdedup_kernel_scan`` oracle (pinned bitwise in pytest and in
+    ``scripts/semdedup_scale_probe.py``), but the pair scan
     runs as ONE int64 Gram matmul per cluster (M @ M.T, exact) instead
     of materializing every pair row with both 64-element arrays
     through a join — measured 216 → see BENCH/semdedup_probe.json

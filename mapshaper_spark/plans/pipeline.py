@@ -251,17 +251,14 @@ def _points_mode(spark, df, o):
 @op("project")
 def _project(spark, df, o):
     """-proj on a ring-array layer: projection by NAME from
-    functions/proj.py (any fwd function appending two columns).
-    CLOSED-FORM projections with a column-pair builder
-    (proj_fn.XY_BUILDERS) run ZERO-SHUFFLE through
-    project_layer_inplace (bitwise-identical values, pinned in
-    pytest). Runtime-ITERATED builders (proj_fn.RUNTIME_ITERATED —
-    the aggregate(sequence) Newton solves) default to project_layer's
-    explode -> codegen -> positional regroup instead: HOF lambdas
-    evaluate interpreted, and the measured A/B says codegen beats the
-    saved shuffle 2.7-9.6x there (see the RUNTIME_ITERATED note).
-    The spec key "inplace" overrides either way (true forces the
-    builder route, false forces explode)."""
+    functions/proj.py. A projection with a column-pair builder
+    (proj_fn.XY_BUILDERS — the closed forms) runs ZERO-SHUFFLE through
+    project_layer_inplace, bitwise-identical to the explode path;
+    any other projection (the Newton solves, utm) runs through
+    project_layer's explode -> codegen -> positional regroup, its
+    point-table function appending the two ``out`` columns. ``args``
+    go to the builder or the point-table function as kwargs, so a key
+    it does not take raises TypeError here, before any Spark job."""
     from ..functions import proj as proj_fn
 
     name = o["name"]
@@ -269,20 +266,10 @@ def _project(spark, df, o):
     keys = tuple(o.get("keys", ("poly_id", "ring_idx")))
     kwargs = o.get("args", {})
     factory = proj_fn.XY_BUILDERS.get(name)
-    inplace = o.get("inplace")
-    if inplace is False or (
-        inplace is not True and name in proj_fn.RUNTIME_ITERATED
-    ):
-        factory = None
     if factory is not None:
-        try:
-            fxy = factory(**kwargs)
-        except TypeError:
-            fxy = None  # kwargs the builder doesn't take -> explode path
-        if fxy is not None:
-            return proj_fn.project_layer_inplace(df, fxy).select(
-                *keys, "xs", "ys"
-            )
+        return proj_fn.project_layer_inplace(df, factory(**kwargs)).select(
+            *keys, "xs", "ys"
+        )
     fwd = getattr(proj_fn, name, None)
     if fwd is None or not callable(fwd):
         raise ValueError(f"unknown projection {name!r}")

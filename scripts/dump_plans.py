@@ -57,7 +57,6 @@ NAMES = (
     "quality_classifier_score",
     "importance_weights_hashed",
     "bpe_pair_counts",
-    "semdedup_cluster_scoped",
     "semdedup_kernel_scan",
     "exact_substring_spans",
     "lm_familiarity_buckets",

@@ -105,13 +105,10 @@ def run(spark, n: int) -> dict:
     # NOTE: the inplace inputs re-derive ring_idx so both paths read the
     # same checkpointed blocks; the extra lit(0) column is free.
 
-    # the 2D-Newton inverse (struct-accumulator aggregate iteration) on
-    # a pre-projected Winkel layer — the heaviest per-vertex expression
-    # in the module (16 steps x 3 forward evaluations per step). Capped
-    # at the 1M-vertex leg: the interpreted in-place path measured
-    # 77.8 s there (9.6x the codegen explode path — the finding that
-    # put the Newton solves in proj.RUNTIME_ITERATED), and tripling
-    # that at 10M vertices would measure nothing new.
+    # the 2D-Newton inverse on a pre-projected Winkel layer — the
+    # heaviest per-vertex expression in the module (16 steps x 3
+    # forward evaluations per step), explode path only (it has no
+    # in-place builder). Capped at the 1M-vertex leg.
     if n <= 100_000:
         wt = proj_fn.project_layer_inplace(
             rings, proj_fn.winkel_tripel_xy()
@@ -120,9 +117,6 @@ def run(spark, n: int) -> dict:
             wt,
             lambda d: proj_fn.winkel_tripel_inverse(d, wtx="lon", wty="lat"),
             out=("lon2", "lat2"),
-        )
-        paths["winkel_inv_inplace"] = lambda: proj_fn.project_layer_inplace(
-            wt, proj_fn.winkel_tripel_inv_xy()
         )
 
     # --- verification (once, untimed): the two paths agree BITWISE and
@@ -135,9 +129,8 @@ def run(spark, n: int) -> dict:
     err = _max_abs_diff(back, rings)
     assert err < 1e-9, err
     out["roundtrip_max_err_deg"] = err
-    if "winkel_inv_inplace" in paths:
-        assert _max_abs_diff(paths["winkel_inv_explode"](), paths["winkel_inv_inplace"]()) == 0.0
-        wt_err = _max_abs_diff(paths["winkel_inv_inplace"](), rings)
+    if "winkel_inv_explode" in paths:
+        wt_err = _max_abs_diff(paths["winkel_inv_explode"](), rings)
         assert wt_err < 1e-9, wt_err
         out["winkel_roundtrip_max_err_deg"] = wt_err
 
@@ -157,8 +150,9 @@ def run(spark, n: int) -> dict:
 
 def main() -> None:
     ns = [int(a) for a in sys.argv[1:]] or [100_000, 1_000_000]
-    spark = get_spark("proj-probe", cpus=32, shuffle_partitions=32)
-    results = [run(spark, n) for n in ns]
+    cpus = len(os.sched_getaffinity(0))
+    spark = get_spark("proj-probe", cpus=cpus, shuffle_partitions=max(cpus, 8))
+    results = [{"cpus": cpus, **run(spark, n)} for n in ns]
     path = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "BENCH",

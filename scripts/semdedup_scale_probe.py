@@ -1,6 +1,6 @@
 """Scale probe for the SemDeDup pair-scan stages at N vectors.
 
-The registered ``semdedup_cluster_scoped`` query is fixture-shaped in
+The registered ``semdedup_kernel_scan`` query is fixture-shaped in
 ONE respect: its k-means assignment inlines k=4 literal seed centroids
 (driver-bounded k-means state). At corpus scale k grows with N so
 clusters stay bounded (k ≈ N / target_cluster_size — Abbas et al.'s
@@ -10,7 +10,8 @@ This probe therefore stands in a hash-uniform cluster id at
 k = N / cluster_size and A/Bs the two pair-scan plans over the SAME
 quantized input:
 
-- JOIN FORM (the oracle-shaped plan the exemplar query runs):
+- JOIN FORM (the oracle's pair self-join shape, kept here and in
+  tests/test_ann.py as the kernel's reference):
   cluster-keyed self-join (va < vb) shipping both 64-element arrays
   per pair -> zip_with integer dot -> exact threshold -> keep-first;
 - GRAM KERNEL (`operators/ann.semdedup_kernel` — the scale path):

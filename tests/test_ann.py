@@ -80,8 +80,8 @@ def _semdedup_synth(spark, n=240, csize=16):
 
 
 def _semdedup_joinform(vecs):
-    """The oracle-shaped pair self-join (semdedup_cluster_scoped's
-    plan) over a prepared (vec_id, cid, qv) frame."""
+    """The oracle-shaped pair self-join over a prepared (vec_id, cid,
+    qv) frame — the reference the Gram kernel is pinned against."""
     q = vecs.withColumn("nq", F.expr("aggregate(qv, 0L, (a, x) -> a + x * x)"))
     a = q.select(
         F.col("vec_id").alias("va"), "cid",

@@ -21,3 +21,13 @@ def test_oracle_parity(spark, name):
 
 def test_all_oracle_queries_have_impls():
     assert set(Q.ORACLES) <= set(Q.QUERIES)
+
+
+def test_driver_window_pinned():
+    """The driver hash-checks only the first 50 registered queries:
+    the window holds 50 distinct, registered, oracle-paired names and
+    the registry really starts with them."""
+    w = Q._DRIVER_WINDOW
+    assert len(w) == len(set(w)) == 50
+    assert set(w) <= set(Q.QUERIES) & set(Q.ORACLES)
+    assert list(Q.QUERIES)[:50] == w

@@ -1322,13 +1322,10 @@ def test_project_layer_inplace_bitwise_and_shuffle_free(spark):
     feats = testdata.holed_features(spark).withColumn("tag", F.lit("t"))
 
     # EVERY forward in XY_BUILDERS sweeps against its point-table form
-    # (one shared expression tree per pair -> must be bitwise), incl.
-    # the aggregate(sequence)-iterated 1D Newton solves
+    # (one shared expression tree per pair -> must be bitwise)
     outs = {
         "to_webmercator": ("mx", "my"),
         "sinusoidal": ("sx", "sy"),
-        "mollweide": ("wx", "wy"),
-        "eckert4": ("ekx", "eky"),
         "albers": ("ax", "ay"),
         "lambert_cc": ("lx", "ly"),
         "lambert_azimuthal": ("zx", "zy"),
@@ -1351,10 +1348,6 @@ def test_project_layer_inplace_bitwise_and_shuffle_free(spark):
     assert set(outs) == set(proj_fn.XY_BUILDERS) - {
         "from_webmercator",  # inverse — covered by the roundtrip below
         "rotate_sphere",  # takes angles — covered in the cases below
-        # 2D-Newton inverses — covered by the struct-accumulator
-        # bitwise + roundtrip checks below
-        "winkel_tripel_inverse",
-        "aitoff_inverse",
     }
     cases = [
         (proj_fn.XY_BUILDERS[n](), getattr(proj_fn, n), outs[n]) for n in outs
@@ -1386,33 +1379,23 @@ def test_project_layer_inplace_bitwise_and_shuffle_free(spark):
         assert np.allclose(got[k][0], oxs, atol=1e-9)
         assert np.allclose(got[k][1], oys, atol=1e-9)
 
-    # the 2D-Newton inverses (struct-accumulator aggregate iteration):
-    # bitwise vs their withColumn-unrolled point-table forms, no
-    # exchange, and the full fwd->inv layer roundtrip restores the
-    # originals to Newton precision
-    for fwd_name, inv_fn, inv_xy, cols in (
-        (
-            "winkel_tripel",
-            proj_fn.winkel_tripel_inverse,
-            proj_fn.winkel_tripel_inv_xy,
-            ("wtx", "wty"),
-        ),
-        ("aitoff", proj_fn.aitoff_inverse, proj_fn.aitoff_inv_xy, ("atx", "aty")),
+    # the 2D-Newton inverses have no builder (they run the explode
+    # path): the in-place forward -> project_layer inverse layer
+    # roundtrip restores the originals to Newton precision
+    for fwd_name, inv_fn, cols in (
+        ("winkel_tripel", proj_fn.winkel_tripel_inverse, ("wtx", "wty")),
+        ("aitoff", proj_fn.aitoff_inverse, ("atx", "aty")),
     ):
         projd = proj_fn.project_layer_inplace(
             feats.drop("tag"), proj_fn.XY_BUILDERS[fwd_name]()
         )
-        ip = proj_fn.project_layer_inplace(projd, inv_xy())
-        ex = proj_fn.project_layer(
+        back = proj_fn.project_layer(
             projd,
             lambda d: inv_fn(d, **{cols[0]: "lon", cols[1]: "lat"}),
             out=("lon2", "lat2"),
         )
-        got = {(r.poly_id, r.ring_idx): (list(r.xs), list(r.ys)) for r in ip.collect()}
-        want = {(r.poly_id, r.ring_idx): (list(r.xs), list(r.ys)) for r in ex.collect()}
-        assert got == want  # exact float equality — same IEEE tree
-        plan = ip._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan
+        got = {(r.poly_id, r.ring_idx): (list(r.xs), list(r.ys)) for r in back.collect()}
+        assert set(got) == set(orig)
         for k, (oxs, oys) in orig.items():
             assert np.allclose(got[k][0], oxs, atol=1e-9)
             assert np.allclose(got[k][1], oys, atol=1e-9)

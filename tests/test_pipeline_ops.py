@@ -6,6 +6,8 @@ asserts the output EXACTLY equals the direct operator chain (the ops
 are deterministic: content-hash ids, bounds-derived grids), so the
 wiring layer can never drift from the operators it names."""
 
+import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from mapshaper_spark import fixtures
@@ -89,8 +91,8 @@ def test_project_layer_spec_webmercator(spark):
 def test_project_spec_routes_zero_shuffle(spark):
     """Closed-form projections route through project_layer_inplace
     (no exchange in the plan); builder kwargs (sinusoidal lon0) reach
-    the factory; Newton projections fall back to the explode path and
-    still match their project_layer form."""
+    the factory; Newton projections have no builder, run the explode
+    path and match their project_layer form."""
     feats = testdata.holed_features(spark)
     # in-place route, with a projection parameter
     got = pipeline.OPS["project"](
@@ -103,21 +105,13 @@ def test_project_spec_routes_zero_shuffle(spark):
     )
     cols = ["poly_id", "ring_idx", "xs", "ys"]
     assert _rows(got, cols) == _rows(want, cols)
-    # 1D Newton solve -> EXPLODE route by default (HOF lambdas run
-    # interpreted; the codegen explode path measured 2.7x faster at 1M
-    # vertices — RUNTIME_ITERATED note in proj.py)
+    # 1D Newton solve -> EXPLODE route (no builder: HOF lambdas run
+    # interpreted, see the XY_BUILDERS note in proj.py)
     got = pipeline.OPS["project"](
         spark, feats, {"name": "mollweide", "out": ["wx", "wy"]}
     )
     assert "Exchange" in got._jdf.queryExecution().executedPlan().toString()
     want = proj_fn.project_layer(feats, proj_fn.mollweide, out=("wx", "wy"))
-    assert _rows(got, cols) == _rows(want, cols)
-    # ... and the explicit "inplace": true override forces the
-    # zero-shuffle builder route, still bitwise-identical
-    got = pipeline.OPS["project"](
-        spark, feats, {"name": "mollweide", "out": ["wx", "wy"], "inplace": True}
-    )
-    assert "Exchange" not in got._jdf.queryExecution().executedPlan().toString()
     assert _rows(got, cols) == _rows(want, cols)
     # winkel's forward is closed-form -> in-place route too
     got = pipeline.OPS["project"](
@@ -126,15 +120,43 @@ def test_project_spec_routes_zero_shuffle(spark):
     assert "Exchange" not in got._jdf.queryExecution().executedPlan().toString()
     want = proj_fn.project_layer(feats, proj_fn.winkel_tripel, out=("wtx", "wty"))
     assert _rows(got, cols) == _rows(want, cols)
-    # kwargs the builder doesn't take (column names are a point-table
-    # concern) -> TypeError fallback to the explode path, same values
-    got = pipeline.OPS["project"](
+
+
+def test_project_spec_bad_args_raise(spark):
+    """A spec arg the builder or point-table function does not take
+    raises TypeError on the driver, before any Spark job runs."""
+    feats = testdata.holed_features(spark)
+    sc = spark.sparkContext
+    sc.setJobGroup("project_bad_args", "project_bad_args")
+    try:
+        for name in ("to_webmercator", "mollweide"):
+            with pytest.raises(TypeError):
+                pipeline.OPS["project"](
+                    spark, feats, {"name": name, "args": {"nope": 1.0}}
+                )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not sc.statusTracker().getJobIdsForGroup("project_bad_args")
+
+
+def test_project_spec_winkel_inverse_roundtrip(spark):
+    """The Winkel Tripel inverse (a 2D Newton, so explode path) runs
+    from a spec naming its input columns, and round-trips a
+    winkel_tripel layer to within 1e-9 degrees."""
+    feats = testdata.holed_features(spark)
+    fwd = pipeline.OPS["project"](spark, feats, {"name": "winkel_tripel"})
+    back = pipeline.OPS["project"](
         spark,
-        feats,
-        {"name": "to_webmercator", "out": ["mx", "my"], "args": {"lon": "lon"}},
+        fwd,
+        {"name": "winkel_tripel_inverse", "args": {"wtx": "lon", "wty": "lat"},
+         "out": ["lon2", "lat2"]},
     )
-    want = proj_fn.project_layer(feats, proj_fn.to_webmercator, out=("mx", "my"))
-    assert _rows(got, cols) == _rows(want, cols)
+    orig = {(r.poly_id, r.ring_idx): (r.xs, r.ys) for r in feats.collect()}
+    got = {(r.poly_id, r.ring_idx): (r.xs, r.ys) for r in back.collect()}
+    assert set(got) == set(orig)
+    for k, (oxs, oys) in orig.items():
+        assert np.allclose(got[k][0], oxs, rtol=0, atol=1e-9)
+        assert np.allclose(got[k][1], oys, rtol=0, atol=1e-9)
 
 
 def test_unknown_names_raise(spark):
