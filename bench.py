@@ -10,7 +10,7 @@ pipeline over the synthetic images table [BASELINE.json metric]:
 parquet scan (column-pruned: bytes stay on disk) → cell assignment →
 two-phase PIP attribution → tile assignment → count per (polygon, tile).
 
-Scaling evidence (local[8] vs local[32]) is produced by scaling_bench.py
+Scaling evidence (local[N] vs local[4N]) is produced by scaling_bench.py
 → BENCH/BASELINE.md.
 """
 
@@ -31,7 +31,7 @@ from mapshaper_spark.session import get_spark  # noqa: E402
 from mapshaper_spark.sources import testdata  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 N_IMAGES = int(os.environ.get("SPARK_GRAFT_BENCH_IMAGES", "200000"))
 IMAGES_PATH = os.environ.get(
     "SPARK_GRAFT_IMAGES_PATH", f"/tmp/mapshaper_spark_images_{N_IMAGES}"

@@ -73,15 +73,6 @@ def customer_points_sql(table: str = "customer") -> str:
     )
 
 
-def lineitem_points_sql(table: str = "lineitem") -> str:
-    """Bigger derived point layer (~600k rows at sf0.1) for bench paths."""
-    k = "(l_orderkey * 7 + l_linenumber)"
-    return (
-        f"SELECT l_orderkey * 10 + l_linenumber AS point_id, "
-        f"{point_lon_sql(k)} AS lon, {point_lat_sql(k)} AS lat FROM {table}"
-    )
-
-
 def supplier_points_sql(table: str = "supplier") -> str:
     """Target point layer for nearest-feature joins (dim-sized)."""
     k = "(s_suppkey * 3 + 1)"

@@ -1485,13 +1485,6 @@ def rasterize_ring(
 # -------------------------------------------------------------- distances ---
 
 
-def planar_dist2(
-    ax: np.ndarray, ay: np.ndarray, bx: np.ndarray, by: np.ndarray
-) -> np.ndarray:
-    """Squared planar distance — the oracle-portable metric (pure * + -)."""
-    return (ax - bx) ** 2 + (ay - by) ** 2
-
-
 def haversine_km(ax, ay, bx, by) -> np.ndarray:
     la1, lo1, la2, lo2 = map(np.radians, (ay, ax, by, bx))
     h = np.sin((la2 - la1) / 2) ** 2 + np.cos(la1) * np.cos(la2) * np.sin((lo2 - lo1) / 2) ** 2

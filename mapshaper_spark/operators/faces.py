@@ -165,9 +165,9 @@ def _cc_labels(
     driver_limit: int = 2_000_000,
 ) -> DataFrame:
     """Connected components over (piece_id) nodes and undirected
-    (src, dst) edges. Size-routed like ``pip_attribute_auto``: the
-    node/edge set is border-segment METADATA (grid geometry, not layer
-    geometry), so when it fits comfortably on the driver
+    (src, dst) edges. Size-routed: the node/edge set is border-segment
+    METADATA (grid geometry, not layer geometry), so when it fits
+    comfortably on the driver
     (≤ ``driver_limit`` rows ≈ tens of MB) a single-pass union-find
     there beats ~log(n) shuffle rounds of Spark-job overhead; above the
     limit the hash-min + pointer-jumping loop (the standard O(log n)-

@@ -32,7 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import cells, geometry
+from .. import cells
 from .spatial_join import FULL, PARTIAL, keep_inside, with_edges
 
 DEFAULT_MIN_RES = 3
@@ -83,109 +83,6 @@ def _cover_one(ring: np.ndarray, min_res: int, max_res: int):
             for dx in (0, 1):
                 stack.append((ix * 2 + dx, iy * 2 + dy, r + 1))
     return out
-
-
-def _cover_one_general(rings: list[np.ndarray], min_res: int, max_res: int):
-    """Hierarchical cover for an ARBITRARY multi-ring feature (concave,
-    holes) — winding-aware classification [VERDICT r1 next #3]:
-
-    - no ring edge crosses the cell → uniform parity: center inside →
-      FULL (emitted at this coarse level), center outside → skip;
-    - an edge crosses → PARTIAL: recurse, emit at max_res.
-
-    Same perimeter-proportional output bound as the convex cover."""
-    edges = np.concatenate(
-        [np.column_stack([r, np.roll(r, -1, axis=0)]) for r in rings]
-    )
-    allx = np.concatenate([r[:, 0] for r in rings])
-    ally = np.concatenate([r[:, 1] for r in rings])
-    bx0, by0, bx1, by1 = allx.min(), ally.min(), allx.max(), ally.max()
-
-    out = []
-    ix0, iy0 = cells.grid_xy_np(np.array([bx0]), np.array([by0]), min_res)
-    ix1, iy1 = cells.grid_xy_np(np.array([bx1]), np.array([by1]), min_res)
-    stack = [
-        (int(ix), int(iy), min_res)
-        for iy in range(int(iy0[0]), int(iy1[0]) + 1)
-        for ix in range(int(ix0[0]), int(ix1[0]) + 1)
-    ]
-    while stack:
-        ix, iy, r = stack.pop()
-        n = 1 << r
-        cw, ch = 360.0 / n, 180.0 / n
-        x_lo, y_lo = -180.0 + ix * cw, -90.0 + iy * ch
-        x_hi, y_hi = x_lo + cw, y_lo + ch
-        if x_lo > bx1 or x_hi < bx0 or y_lo > by1 or y_hi < by0:
-            continue
-        crossing = geometry.edges_intersect_rects(
-            edges, np.array([x_lo]), np.array([y_lo]), np.array([x_hi]), np.array([y_hi])
-        )[0]
-        if not crossing:
-            center_in = geometry.pip_rings(
-                np.array([(x_lo + x_hi) / 2.0]), np.array([(y_lo + y_hi) / 2.0]), rings
-            )[0]
-            if center_in:
-                out.append(
-                    (int(cells.cell_id_from_xy_np(np.array([ix]), np.array([iy]), r)[0]), FULL)
-                )
-            continue
-        if r >= max_res:
-            out.append(
-                (int(cells.cell_id_from_xy_np(np.array([ix]), np.array([iy]), r)[0]), PARTIAL)
-            )
-            continue
-        for dy in (0, 1):
-            for dx in (0, 1):
-                stack.append((ix * 2 + dx, iy * 2 + dy, r + 1))
-    return out
-
-
-def build_cell_index_hier_general(
-    spark: SparkSession,
-    features: DataFrame,
-    min_res: int = DEFAULT_MIN_RES,
-    max_res: int = DEFAULT_MAX_RES,
-) -> DataFrame:
-    """Mixed-resolution cover for multi-ring features (one input row per
-    ring; groupBy poly_id reassembles)."""
-
-    def cover(pdf: pd.DataFrame) -> pd.DataFrame:
-        rings = [
-            np.column_stack([np.asarray(r["xs"]), np.asarray(r["ys"])])
-            for _, r in pdf.iterrows()
-        ]
-        rows = [
-            {"cell_id": cid, "poly_id": int(pdf["poly_id"].iloc[0]), "coverage": cov}
-            for cid, cov in _cover_one_general(rings, min_res, max_res)
-        ]
-        return pd.DataFrame(rows, columns=["cell_id", "poly_id", "coverage"])
-
-    return features.groupBy("poly_id").applyInPandas(
-        cover, schema="cell_id long, poly_id int, coverage string"
-    )
-
-
-def pip_attribute_hier_general(
-    points: DataFrame,
-    hier_index: DataFrame,
-    rings: dict[int, list[np.ndarray]],
-    min_res: int = DEFAULT_MIN_RES,
-    max_res: int = DEFAULT_MAX_RES,
-) -> DataFrame:
-    """PIP against the general mixed-resolution cover: multi-level probe
-    explode + broadcast join, masked multi-ring kernel on PARTIAL."""
-    from .spatial_join import _pip_rings_udf
-
-    level_cells = F.array(
-        *[F.expr(cells.cell_sql("lon", "lat", r)) for r in range(min_res, max_res + 1)]
-    )
-    pts = points.withColumn("cell_id", F.explode(level_cells))
-    cand = pts.join(F.broadcast(hier_index), "cell_id")
-    inside = _pip_rings_udf(rings)
-    keep = inside(
-        F.col("poly_id"), F.col("lon"), F.col("lat"), F.col("coverage") == FULL
-    )
-    return cand.filter(keep).drop("coverage")
 
 
 def build_cell_index_hier(

@@ -107,18 +107,13 @@ def _rank_topk(cand: DataFrame, k: int) -> DataFrame:
     )
 
 
-def knn_join(
-    points: DataFrame,
-    targets: DataFrame,
-    k: int = 1,
-    res: int | None = None,
-    expansion_rings: tuple[int, ...] | None = None,
-) -> DataFrame:
+def knn_join(points: DataFrame, targets: DataFrame, k: int = 1) -> DataFrame:
     """Exact kNN join: (point cols..., target_id, dist2, knn_rank).
 
-    points: (point_id, lon, lat); targets: (target_id, lon, lat).
-    res=None picks the resolution from the measured target count (the
-    dim side is counted anyway to size the broadcast).
+    points: (point_id, lon, lat); targets: (target_id, lon, lat). The
+    grid resolution comes from the measured target count
+    (:func:`auto_res`; the dim side is counted anyway to size the
+    broadcast).
 
     Adaptive ring expansion [NEXT.md #5]: round 1 searches a block of
     the target grid (targets replicated, broadcast — the bulk of the
@@ -129,25 +124,22 @@ def knn_join(
     scale this keeps the cross-join fallback to the (empty-region) tail
     instead of every sparse-cell point.
 
-    K-CONDITIONAL stage layout [VERDICT r3 #5]: expansion_rings=None
-    resolves to (1, 3) for k=1 but (2,) for k>1 — the k-th neighbor
-    rarely passes the 1-cell guarantee, so at k>1 the second ring stage
-    (an extra shuffle + materialization + count) ran for nearly every
-    point; one 5x5 first block (targets replicated x25 instead of x9 —
-    trivial on the broadcast dim side) resolves those points in a
-    single stage. Results are identical either way (the operator is
-    exact); only the plan changes.
+    K-CONDITIONAL stage layout [VERDICT r3 #5]: the rings are (1, 3)
+    for k=1 but (2,) for k>1 — the k-th neighbor rarely passes the
+    1-cell guarantee, so at k>1 the second ring stage (an extra
+    shuffle + materialization + count) ran for nearly every point; one
+    5x5 first block (targets replicated x25 instead of x9 — trivial on
+    the broadcast dim side) resolves those points in a single stage.
+    Results are identical either way (the operator is exact); only the
+    plan changes.
     """
-    if res is None:
-        res = auto_res(targets.count())
-    if expansion_rings is None:
-        expansion_rings = (1, 3) if k == 1 else (2,)
+    res = auto_res(targets.count())
+    rings = (1, 3) if k == 1 else (2,)
     cell_h = 180.0 / (1 << res)
 
     pts = points.withColumn("cell_id", F.expr(cells.cell_sql("lon", "lat", res)))
-    ring0 = expansion_rings[0] if expansion_rings else 1
     tgt9 = _explode_neighbors(
-        targets.select("target_id", "lon", "lat"), res, ring=ring0
+        targets.select("target_id", "lon", "lat"), res, ring=rings[0]
     ).select(
         "cell_id", "target_id", F.col("lon").alias("tx"), F.col("lat").alias("ty")
     )
@@ -175,7 +167,7 @@ def knn_join(
     n_resolved = 0
     pieces = []
     rest = pts
-    for i, ring in enumerate(expansion_rings):
+    for i, ring in enumerate(rings):
         if i == 0:
             cand = rest.join(F.broadcast(tgt9), "cell_id")
         else:
@@ -205,10 +197,7 @@ def knn_join(
 
     if n_pts is None:
         n_pts = pts.count()
-    if n_resolved < n_pts or not pieces:
-        # the brute piece is unconditional when nothing else produced a
-        # frame (expansion_rings=() on an empty input would otherwise
-        # leave pieces empty and crash below) [ADVICE r3 #3]
+    if n_resolved < n_pts:
         brute = rest.crossJoin(F.broadcast(allt)).withColumn(
             "dist2", _dist2(F.col("lon"), F.col("lat"), F.col("tx"), F.col("ty"))
         )

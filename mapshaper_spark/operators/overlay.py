@@ -222,8 +222,8 @@ def _divide_walk(
     prepped = []
     seen = set()
     for pid, ring in cands:
-        # the cells prefilter can deliver the same (arc, poly) pair
-        # once per shared cell — dedupe here, where it's free
+        # a polygon layer with several rows per poly_id delivers the
+        # same pid once per row — keep the first, here where it's free
         if pid in seen:
             continue
         seen.add(pid)
@@ -264,9 +264,7 @@ def _divide_walk(
     return agg
 
 
-def divide_polylines(
-    lines: DataFrame, polygons: DataFrame, prefilter: str = "broadcast"
-) -> DataFrame:
+def divide_polylines(lines: DataFrame, polygons: DataFrame) -> DataFrame:
     """``-divide``: split a polyline layer by a polygon layer.
 
     [UPSTREAM ``src/commands/mapshaper-divide.mjs`` — public knowledge
@@ -289,8 +287,6 @@ def divide_polylines(
     with the per-arc groups BATCHED via collect_list + mapInPandas
     (per-group applyInPandas measured 4.3k arcs/s vs 16.3k/s batched
     at 100k arcs, 294k/s at 1M — BENCH/divide_probe.json).
-    At 100-TB scale the broadcast prefilter swaps for the cell-grid
-    equi-join (the ``clip_polylines`` shape) without touching the walk.
 
     Returns (arc_id, poly_id, n_pieces, len_sum); poly_id = -1 marks
     the pieces outside every polygon.
@@ -319,45 +315,9 @@ def divide_polylines(
         & (F.col("s_ymin") <= F.col("c_ymax"))
         & (F.col("s_ymax") >= F.col("c_ymin"))
     )
-    if prefilter == "broadcast":
-        pairs = s.join(F.broadcast(c), cond, "left").select(
-            "arc_id", "sxs", "sys", "cand_poly", "cxs", "cys"
-        )
-    elif prefilter == "cells":
-        # the 100-TB shape: BOTH layers explode to the grid cells of
-        # their bbox (bounded replication), candidates equi-join on
-        # cell — no broadcast; a pair matching in several shared cells
-        # dedups inside the fold. LEFT join against the one-row-per-arc
-        # side keeps candidate-free arcs emitting their outside piece.
-        from .. import cells as cells_mod
-
-        res = 5
-        six0, siy0 = cells_mod.grid_xy_sql("s_xmin", "s_ymin", res)
-        six1, siy1 = cells_mod.grid_xy_sql("s_xmax", "s_ymax", res)
-        sc = (
-            s.withColumn("_cx", F.explode(F.expr(f"sequence({six0}, {six1})")))
-            .withColumn("_cy", F.explode(F.expr(f"sequence({siy0}, {siy1})")))
-            .withColumn("_cell", F.expr(cells_mod.morton_sql("_cx", "_cy")))
-            .drop("_cx", "_cy")
-        )
-        cix0, ciy0 = cells_mod.grid_xy_sql("c_xmin", "c_ymin", res)
-        cix1, ciy1 = cells_mod.grid_xy_sql("c_xmax", "c_ymax", res)
-        cc = (
-            c.withColumn("_cx", F.explode(F.expr(f"sequence({cix0}, {cix1})")))
-            .withColumn("_cy", F.explode(F.expr(f"sequence({ciy0}, {ciy1})")))
-            .withColumn("_cell", F.expr(cells_mod.morton_sql("_cx", "_cy")))
-            .drop("_cx", "_cy")
-        )
-        matched = (
-            sc.join(cc, "_cell")
-            .filter(cond)
-            .select("arc_id", "sxs", "sys", "cand_poly", "cxs", "cys")
-        )
-        pairs = s.select("arc_id", "sxs", "sys").join(
-            matched.select("arc_id", "cand_poly", "cxs", "cys"), "arc_id", "left"
-        )
-    else:
-        raise ValueError(f"unknown prefilter {prefilter!r}")
+    pairs = s.join(F.broadcast(c), cond, "left").select(
+        "arc_id", "sxs", "sys", "cand_poly", "cxs", "cys"
+    )
 
     def fold(batches):
         # BATCHED like the stitch folds: candidates pre-aggregate per

@@ -307,91 +307,6 @@ def pip_attribute_general(
     return cand.filter(keep).drop("coverage")
 
 
-def pip_attribute_grouped(
-    points: DataFrame,
-    cell_index: DataFrame,
-    rings_df: DataFrame,
-    res: int = DEFAULT_RES,
-) -> DataFrame:
-    """PIP attribution with ring geometry flowing through the PLAN, not a
-    Python closure — the scale path for polygon layers beyond dim size
-    [VERDICT r1 #6: a million-polygon layer cannot ride in a UDF closure].
-
-    Candidates (from the broadcast cell-index join) are cogrouped with
-    the ring table on poly_id; each group's kernel sees only its own
-    feature's rings. Cost vs the closure path: one extra shuffle of the
-    candidate rows on poly_id — the price of unbounded layer size. FULL
-    coverage rows skip the kernel inside the group.
-
-    rings_df: (poly_id, ring_idx, xs array<double>, ys array<double>).
-    """
-    pts = with_cell(points, res)
-    cand = pts.join(F.broadcast(cell_index), "cell_id")
-    out_cols = [c for c in cand.columns if c != "coverage"]
-    out_fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in cand.schema.fields
-        if f.name != "coverage"
-    )
-
-    def kernel(key, cpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if len(cpdf) == 0:
-            return cpdf.drop(columns=["coverage"])
-        rings = [
-            np.column_stack([np.asarray(r["xs"]), np.asarray(r["ys"])])
-            for _, r in rpdf.iterrows()
-        ]
-        full = (cpdf["coverage"] == FULL).to_numpy()
-        keep = full.copy()
-        todo = ~full
-        if todo.any() and rings:
-            keep[todo] = geometry.pip_rings(
-                cpdf["lon"].to_numpy()[todo], cpdf["lat"].to_numpy()[todo], rings
-            )
-        return cpdf.loc[keep, [c for c in cpdf.columns if c != "coverage"]]
-
-    return (
-        cand.groupBy("poly_id")
-        .cogroup(rings_df.groupBy("poly_id"))
-        .applyInPandas(kernel, schema=out_fields)
-        .select(*out_cols)
-    )
-
-
-def pip_attribute_auto(
-    points: DataFrame,
-    cell_index: DataFrame,
-    rings: dict[int, np.ndarray | list[np.ndarray]] | None = None,
-    rings_df: DataFrame | None = None,
-    res: int = DEFAULT_RES,
-    closure_limit: int = 1024,
-) -> DataFrame:
-    """Route PIP through the right kernel transport for the layer size
-    [NEXT r3 #2]: a dim-sized ring dict rides the UDF closure (fastest —
-    no extra shuffle); anything larger, or any layer only available as a
-    DataFrame, goes through the cogrouped plan where ring geometry flows
-    through the broadcast/cogroup machinery instead of the driver."""
-    if rings is not None and len(rings) <= closure_limit:
-        return pip_attribute_general(points, cell_index, rings, res)
-    if rings_df is None:
-        if rings is None:
-            raise ValueError("need rings or rings_df")
-        import pandas as pd
-
-        rows = []
-        for pid, rs in rings.items():
-            for i, r in enumerate(_as_ring_list(rs)):
-                rows.append(
-                    {"poly_id": pid, "ring_idx": i,
-                     "xs": r[:, 0].tolist(), "ys": r[:, 1].tolist()}
-                )
-        rings_df = points.sparkSession.createDataFrame(
-            pd.DataFrame(rows),
-            schema="poly_id int, ring_idx int, xs array<double>, ys array<double>",
-        )
-    return pip_attribute_grouped(points, cell_index, rings_df, res)
-
-
 def clip_points(
     points: DataFrame,
     cell_index: DataFrame,
@@ -450,7 +365,6 @@ def fuzzy_join(
     cell_index: DataFrame,
     radius: float,
     res: int = DEFAULT_RES,
-    prefilter: str = "broadcast",
 ) -> DataFrame:
     """``-fuzzy-join``: PIP join with a nearest-boundary radius fallback.
 
@@ -464,7 +378,8 @@ def fuzzy_join(
     Engine shape:
 
     1. containment rides the existing two-phase cell join
-       (``pip_attribute`` — FULL cells skip geometry); a point in
+       (``pip_attribute`` over the rings of ``polygons`` — FULL cells
+       skip geometry); a point in
        several polygons dedups to the smallest poly_id (upstream keeps
        one match);
     2. ONLY the misses (anti-join) enter the fallback: candidates =
@@ -477,21 +392,23 @@ def fuzzy_join(
     3. nearest polygon wins, ties to the smallest poly_id; misses
        beyond the radius drop (inner-join semantics, like upstream).
 
-    At 100-TB scale: step 1 is the proven PIP plan; the fallback only
-    carries the residual miss fraction, and ``prefilter="cells"``
-    swaps the broadcast for bounded replication — each polygon
-    explodes to every grid cell its radius-expanded bbox covers and
-    the misses equi-join on their OWN cell (the kNN candidate shape:
-    no broadcast, no all-pairs, one shuffle on cell). The bbox filter
-    stays as the secondary prune, the distance math is untouched, and
-    a point meets a polygon in exactly one cell (its own), so no
-    dedup is needed before the window. The match table is consumed
-    twice (output + anti-join), so it checkpoints eagerly [CLAUDE.md:
-    no persist() in re-invoked operators].
+    At scale, step 1 is the proven PIP plan and the fallback only
+    carries the residual miss fraction. A cell-partitioned fallback
+    (polygons exploded to the grid cells of their radius-expanded bbox,
+    misses equi-joined on their own cell) lost or tied against the
+    broadcast at every size tried on 4 cores (radius 6, 16 polygons,
+    medians of 10 interleaved pairs): 2.29 vs 2.63 s at 15k points,
+    8.28 vs 8.65 s at 250k, 11.90 vs 12.06 s at 1M.
+    The match table is consumed twice (output + anti-join), so it
+    checkpoints eagerly (no persist() in re-invoked operators).
 
     Returns (point_id, poly_id, fuzzy) — fuzzy=0 containment, 1 radius.
     """
-    hits = pip_attribute(points, cell_index, res=res)
+    rings = {
+        r["poly_id"]: np.column_stack([r["xs"], r["ys"]])
+        for r in polygons.select("poly_id", "xs", "ys").collect()
+    }
+    hits = pip_attribute(points, cell_index, rings, res)
     pip_best = (
         hits.groupBy("point_id")
         .agg(F.min("poly_id").alias("poly_id"))
@@ -514,24 +431,7 @@ def fuzzy_join(
         & (F.col("lat") >= F.col("by0"))
         & (F.col("lat") <= F.col("by1"))
     )
-    if prefilter == "broadcast":
-        cand = miss.join(F.broadcast(pb), bbox_cond)
-    elif prefilter == "cells":
-        ix0, iy0 = cells.grid_xy_sql("bx0", "by0", res)
-        ix1, iy1 = cells.grid_xy_sql("bx1", "by1", res)
-        pc = (
-            pb.withColumn("_cx", F.explode(F.expr(f"sequence({ix0}, {ix1})")))
-            .withColumn("_cy", F.explode(F.expr(f"sequence({iy0}, {iy1})")))
-            .withColumn("_cell", F.expr(cells.morton_sql("_cx", "_cy")))
-            .drop("_cx", "_cy")
-        )
-        pix, piy = cells.grid_xy_sql("lon", "lat", res)
-        mc = miss.withColumn(
-            "_cell", F.expr(cells.morton_sql(f"({pix})", f"({piy})"))
-        )
-        cand = mc.join(pc, "_cell").filter(bbox_cond).drop("_cell")
-    else:
-        raise ValueError(f"unknown prefilter {prefilter!r}")
+    cand = miss.join(F.broadcast(pb), bbox_cond)
     d2 = fixtures.seg_d2_sql(
         "lon",
         "lat",

@@ -5044,21 +5044,6 @@ def q_fuzzy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sj.fuzzy_join(pts, polys, idx, radius=6.0)
 
 
-@query("fuzzy_join_radius_cells", _FUZZY_ORACLE)
-def q_fuzzy_join_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """-fuzzy-join, prefilter="cells" plan variant (parity tail): the
-    100-TB fallback shape — each polygon explodes to every grid cell
-    its radius-expanded bbox covers and the misses equi-join on their
-    OWN cell (no broadcast, no all-pairs), bbox as the secondary prune,
-    identical distance math. Same oracle as fuzzy_join_radius — the
-    prefilter is a superset filter, so the output must hash-match it
-    exactly."""
-    pts = testdata.customer_points(spark, sf_dir)
-    polys = testdata.polygons(spark)
-    idx = sj.build_cell_index(spark, polys)
-    return sj.fuzzy_join(pts, polys, idx, radius=6.0, prefilter="cells")
-
-
 _DIVIDE_ORACLE = f"""
     WITH rects AS (SELECT poly_id, CAST(rx0 AS DOUBLE) AS rx0, CAST(ry0 AS DOUBLE) AS ry0,
                           CAST(rx1 AS DOUBLE) AS rx1, CAST(ry1 AS DOUBLE) AS ry1
@@ -5137,20 +5122,6 @@ def q_divide_polylines(spark: SparkSession, sf_dir: str) -> DataFrame:
     constraint. poly_id = -1 marks pieces outside every polygon."""
     lines = topology.arcs_df(spark, fixtures.DIVIDE_LINES)
     return overlay_op.divide_polylines(lines, testdata.divide_rects(spark))
-
-
-@query("divide_polylines_cells", _DIVIDE_ORACLE)
-def q_divide_polylines_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """-divide, prefilter="cells" plan variant (parity tail): both
-    layers explode to the grid cells of their bbox and candidates
-    equi-join on cell (bounded replication, no broadcast — the 100-TB
-    shape); pairs matching in several shared cells dedupe inside the
-    fold. Same oracle as divide_polylines_lengths — the prefilter is a
-    superset filter, so the output must hash-match it exactly."""
-    lines = topology.arcs_df(spark, fixtures.DIVIDE_LINES)
-    return overlay_op.divide_polylines(
-        lines, testdata.divide_rects(spark), prefilter="cells"
-    )
 
 
 @query(

@@ -1,8 +1,9 @@
 """SparkSession factory tuned for the engine.
 
-Local-mode defaults match the sandbox (32 cores, 128 GiB); on a real
-cluster the same confs apply per-executor and the shuffle-partition
-count should be raised to ~2-3x total cores (AQE coalesces down).
+Local mode defaults to every core this process may run on
+(``SPARK_GRAFT_CPUS`` overrides); on a real cluster the same confs
+apply per-executor and the shuffle-partition count should be raised to
+~2-3x total cores (AQE coalesces down).
 """
 
 from __future__ import annotations
@@ -11,7 +12,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
 
 def get_spark(

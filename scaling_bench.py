@@ -5,7 +5,8 @@ sizes (N and 4N executors) with throughput scaling efficiency >=0.8"].
 No real cluster exists in this sandbox, so per the task brief the same
 job runs at two parallelism levels — local[N] vs local[4N]
 (default 4 vs 16, see CPU_PAIR) — each in its OWN subprocess (fresh
-JVM, no warm-cache bleed), over the identical input parquet. Reported:
+JVM, no warm-cache bleed), over the identical input parquet. It needs
+a machine with at least 16 cores. Reported:
 
     throughput(N), throughput(4N), efficiency = (T_N / T_4N) / 4
 

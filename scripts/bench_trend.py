@@ -1,7 +1,10 @@
 #!/usr/bin/env python
 """Round-over-round bench trends: reads every BENCH_r*.json in the repo
 root and prints a per-query markdown table with deltas vs the previous
-round (regressions self-report; >25% slowdowns flagged)."""
+round (regressions self-report; >25% slowdowns flagged). A delta is
+only taken between two rounds that record the same ``cpus``: a ratio
+across core counts measures the machine, not the code, and a round
+with no ``cpus`` field is labelled not comparable."""
 
 from __future__ import annotations
 
@@ -22,7 +25,7 @@ def load_rounds():
             continue
         with open(path) as f:
             d = json.load(f)
-        parsed = d.get("parsed", d)
+        parsed = d.get("parsed", d) or {}
         rounds.append((int(m.group(1)), parsed))
     return rounds
 
@@ -33,6 +36,8 @@ def main() -> None:
         print("no BENCH_r*.json found", file=sys.stderr)
         return
     names = sorted({q for _, d in rounds for q in d.get("queries", {})})
+    cpus = [d.get("cpus") for _, d in rounds]
+    comparable = len(rounds) >= 2 and cpus[-1] is not None and cpus[-1] == cpus[-2]
     header = "| query | " + " | ".join(f"r{n}" for n, _ in rounds) + " | Δ last |"
     print(header)
     print("|" + "---|" * (len(rounds) + 2))
@@ -46,11 +51,17 @@ def main() -> None:
         # only a true latest-vs-previous delta: if either of the final
         # two rounds is missing this query, print no ratio (a fallback
         # to older rounds would mislabel the column) [ADVICE r2]
-        if len(vals) >= 2 and vals[-1] is not None and vals[-2] is not None and vals[-2] > 0:
+        if not comparable:
+            flag = "not comparable"
+        elif vals[-1] is not None and vals[-2] is not None and vals[-2] > 0:
             ratio = vals[-1] / vals[-2]
             flag = f"{ratio:.2f}x" + (" ⚠" if ratio > 1.25 else "")
         print(f"| {q} | " + " | ".join(cells) + f" | {flag} |")
     print()
+    print("cpus: " + " → ".join(
+        f"r{n} {c}" if c is not None else f"r{n} not comparable (no cpus)"
+        for (n, _), c in zip(rounds, cpus)
+    ))
     for key in ("value", "value_warm", "images_per_sec", "images_per_sec_warm"):
         row = [d.get(key) for _, d in rounds]
         if any(v is not None for v in row):

@@ -79,7 +79,7 @@ def main() -> None:
         xs, ys, area = feature_walk(rng, ox, oy)
         rows.append({"feature_id": fid, "key": "k", "xs": xs, "ys": ys})
         want += area
-    spark = get_spark("buffer_probe", cpus=32, shuffle_partitions=32)
+    spark = get_spark("buffer_probe")
     lines = spark.createDataFrame(
         pd.DataFrame(rows),
         schema="feature_id int, key string, xs array<double>, ys array<double>",

@@ -52,7 +52,7 @@ def make_layers(spark, n):
 
 def main() -> None:
     sizes = [int(a) for a in sys.argv[1:]] or [100_000]
-    spark = session.get_spark("divide_scale_probe", cpus=32)
+    spark = session.get_spark("divide_scale_probe")
     out = {"runs": []}
     for n in sizes:
         arcs, rects = make_layers(spark, n)

@@ -85,7 +85,7 @@ def run(spark, k: int, res: int) -> dict:
 
 def main() -> None:
     ks = [int(a) for a in sys.argv[1:]] or [10, 25]
-    spark = get_spark("gapfill-probe", cpus=32, shuffle_partitions=32)
+    spark = get_spark("gapfill-probe")
     results = []
     for k in ks:
         res = 5 if k <= 16 else 6

@@ -78,7 +78,7 @@ def run(spark, n: int) -> dict:
 
 def main() -> None:
     ns = [int(a) for a in sys.argv[1:]] or [100_000, 1_000_000]
-    spark = get_spark("points-probe", cpus=32, shuffle_partitions=32)
+    spark = get_spark("points-probe")
     results = [run(spark, n) for n in ns]
     path = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),

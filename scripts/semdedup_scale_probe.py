@@ -171,7 +171,7 @@ def run(spark, n: int, csize: int) -> dict:
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
     csize = int(sys.argv[2]) if len(sys.argv) > 2 else 128
-    spark = get_spark("semdedup-probe", cpus=32, shuffle_partitions=32)
+    spark = get_spark("semdedup-probe")
     result = run(spark, n, csize)
     path = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),

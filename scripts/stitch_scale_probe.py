@@ -57,7 +57,7 @@ def make_layer(spark, n):
 
 def main() -> None:
     sizes = [int(a) for a in sys.argv[1:]] or [100_000, 1_000_000]
-    spark = session.get_spark("stitch_scale_probe", cpus=32)
+    spark = session.get_spark("stitch_scale_probe")
     out = {"runs": []}
     for n in sizes:
         pieces, base = make_layer(spark, n)

@@ -454,7 +454,7 @@ def run(spark, n: int, tmp: str) -> dict:
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
     tmp = f"/tmp/mapshaper_spark_textops_{n}"
-    spark = get_spark("textops-probe", cpus=32, shuffle_partitions=32)
+    spark = get_spark("textops-probe")
     try:
         result = run(spark, n, tmp)
     finally:

@@ -30,7 +30,7 @@ from mapshaper_spark.sources import geojson as gj  # noqa: E402
 
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 200
-    spark = session.get_spark("topojson_quant_probe", cpus=32)
+    spark = session.get_spark("topojson_quant_probe")
     arcs, feats = fixtures._make_grid_topology(n)
     fdf = topology.features_df(spark, feats).localCheckpoint()
     adf = topology.arcs_df(spark, arcs).localCheckpoint()

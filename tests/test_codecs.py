@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import json
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
@@ -271,7 +272,10 @@ def test_shp_dbf_attrs_drive_join(spark, tmp_path):
     pts = testdata.customer_points(spark, SF_SMOKE)
     geom = imported.select("poly_id", "ring_idx", "xs", "ys")
     idx = sj.build_cell_index_general(spark, geom)
-    counts = sj.pip_attribute_grouped(pts, idx, geom).groupBy("poly_id").count()
+    rings = {}
+    for r in geom.orderBy("poly_id", "ring_idx").collect():
+        rings.setdefault(r["poly_id"], []).append(np.column_stack([r["xs"], r["ys"]]))
+    counts = sj.pip_attribute_general(pts, idx, rings).groupBy("poly_id").count()
     labeled = counts.join(
         imported.select("poly_id", "region", "rank").distinct(), "poly_id"
     )

@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import numpy as np
 
 from mapshaper_spark.operators import spatial_join as sj
 
@@ -16,13 +16,17 @@ def _layer(spark):
         ],
         "poly_id int, name string, xs array<double>, ys array<double>",
     )
-    import numpy as np
-
     rings = {
         0: np.array([[0.0, 0.0], [4.0, 0.0], [4.0, 4.0], [0.0, 4.0]]),
         1: np.array([[14.0, 0.0], [18.0, 0.0], [18.0, 4.0], [14.0, 4.0]]),
     }
     return polys, rings
+
+
+def _fuzzy(spark, pts, polys, radius):
+    idx = sj.build_cell_index(spark, polys)
+    rows = sj.fuzzy_join(pts, polys, idx, radius=radius).collect()
+    return {(r["point_id"], r["poly_id"], r["fuzzy"]) for r in rows}
 
 
 def test_fuzzy_join_kinds_and_drops(spark):
@@ -37,71 +41,42 @@ def test_fuzzy_join_kinds_and_drops(spark):
         ],
         "point_id long, lon double, lat double",
     )
-    # pip_attribute's kernel rings come from the convex fixture layer by
-    # default — pass the local layer's rings explicitly via a local
-    # fuzzy run: patch through the same public surface the query uses.
     hits = sj.pip_attribute(pts, idx, rings=rings)
     assert {(r["point_id"], r["poly_id"]) for r in hits.collect()} == {(0, 0)}
 
-    out = _fuzzy(spark, pts, polys, idx, rings, radius=2.0)
+    out = _fuzzy(spark, pts, polys, radius=2.0)
+    assert out == {(0, 0, 0), (1, 0, 1), (2, 1, 1)}
+
+
+def test_fuzzy_join_uses_callers_layer(spark):
+    """Containment is tested against the ``polygons`` argument's own
+    rings, not the default fixture layer: the point inside square a
+    comes back as fuzzy=0."""
+    polys, _ = _layer(spark)
+    pts = spark.createDataFrame(
+        [(0, 2.0, 2.0), (1, 5.5, 2.0), (2, 12.5, 2.0)],
+        "point_id long, lon double, lat double",
+    )
+    out = _fuzzy(spark, pts, polys, radius=2.0)
     assert out == {(0, 0, 0), (1, 0, 1), (2, 1, 1)}
 
 
 def test_fuzzy_join_tie_breaks_to_smaller_poly_id(spark):
-    polys, rings = _layer(spark)
-    idx = sj.build_cell_index(spark, polys)
+    polys, _ = _layer(spark)
     # exact midpoint between the two facing edges (x=4 and x=14)
     pts = spark.createDataFrame(
         [(0, 9.0, 2.0)], "point_id long, lon double, lat double"
     )
-    out = _fuzzy(spark, pts, polys, idx, rings, radius=6.0)
+    out = _fuzzy(spark, pts, polys, radius=6.0)
     assert out == {(0, 0, 1)}
 
 
 def test_fuzzy_radius_boundary_is_inclusive(spark):
-    polys, rings = _layer(spark)
-    idx = sj.build_cell_index(spark, polys)
+    polys, _ = _layer(spark)
     pts = spark.createDataFrame(
         [(0, 6.0, 2.0), (1, 6.5, 2.0)],
         "point_id long, lon double, lat double",
     )
     # d to a's right edge: 2.0 (== radius, kept) and 2.5 (dropped)
-    out = _fuzzy(spark, pts, polys, idx, rings, radius=2.0)
+    out = _fuzzy(spark, pts, polys, radius=2.0)
     assert out == {(0, 0, 1)}
-
-
-def test_fuzzy_join_cells_prefilter_matches_broadcast(spark):
-    """The prefilter="cells" scale path (bounded bbox-cell replication,
-    no broadcast) is a superset filter ahead of identical distance
-    math — outputs must match the broadcast plan exactly."""
-    import pytest
-
-    polys, rings = _layer(spark)
-    idx = sj.build_cell_index(spark, polys)
-    pts = spark.createDataFrame(
-        [(0, 2.0, 2.0), (1, 5.5, 2.0), (2, 12.5, 2.0), (3, 9.0, 50.0)],
-        "point_id long, lon double, lat double",
-    )
-    a = _fuzzy(spark, pts, polys, idx, rings, radius=2.0)
-    b = _fuzzy(spark, pts, polys, idx, rings, radius=2.0, prefilter="cells")
-    assert a == b == {(0, 0, 0), (1, 0, 1), (2, 1, 1)}
-    with pytest.raises(ValueError):
-        sj.fuzzy_join(pts, polys, idx, radius=2.0, prefilter="nope")
-
-
-def _fuzzy(spark, pts, polys, idx, rings, radius, prefilter="broadcast"):
-    import mapshaper_spark.operators.spatial_join as sjm
-
-    orig = sjm.pip_attribute
-
-    def patched(points, cell_index, rings_arg=None, res=sjm.DEFAULT_RES):
-        return orig(points, cell_index, rings=rings, res=res)
-
-    sjm.pip_attribute = patched
-    try:
-        rows = sjm.fuzzy_join(
-            pts, polys, idx, radius=radius, prefilter=prefilter
-        ).collect()
-    finally:
-        sjm.pip_attribute = orig
-    return {(r["point_id"], r["poly_id"], r["fuzzy"]) for r in rows}

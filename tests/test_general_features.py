@@ -1,17 +1,15 @@
 """General (non-convex, multi-ring, holed) features through the graded
 join core [VERDICT r1 next #3, #6]: winding-aware covers must emit FULL
-cells, the three probe plans (closure kernel, cogrouped de-closure
-kernel, hierarchical cover) must agree exactly, and the de-closure path
-must handle a polygon layer far beyond closure-dict size."""
+cells and drop outside ones, hole points must miss, and the even-odd
+kernel's closure transport must hold a polygon layer far beyond
+dim size."""
 
 from __future__ import annotations
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from mapshaper_spark import fixtures
-from mapshaper_spark.operators import hier_cover as hier
 from mapshaper_spark.operators import spatial_join as sj
 from mapshaper_spark.sources import testdata
 
@@ -52,41 +50,6 @@ def test_hole_points_excluded(spark):
     assert not any(p == 3 for p, _ in got)
 
 
-def test_grouped_kernel_matches_closure_kernel(spark):
-    pts = _pts(spark)
-    feats = testdata.holed_features(spark)
-    idx = sj.build_cell_index_general(spark, feats)
-    a = _hits_set(sj.pip_attribute_general(pts, idx, fixtures.multiring_rings()))
-    b = _hits_set(sj.pip_attribute_grouped(pts, idx, feats))
-    assert a == b and len(a) > 0
-
-
-def test_hier_general_matches_flat_general(spark):
-    pts = _pts(spark)
-    feats = testdata.holed_features(spark)
-    flat = sj.build_cell_index_general(spark, feats)
-    hidx = hier.build_cell_index_hier_general(spark, feats)
-    a = _hits_set(sj.pip_attribute_general(pts, flat, fixtures.multiring_rings()))
-    b = _hits_set(
-        hier.pip_attribute_hier_general(pts, hidx, fixtures.multiring_rings())
-    )
-    assert a == b and len(a) > 0
-    # the hier index emits coarse FULL cells: strictly fewer rows than flat
-    assert hidx.count() < flat.count()
-
-
-def test_pip_auto_routes_both_transports(spark):
-    """pip_attribute_auto: the closure route (small dict) and the forced
-    cogrouped route (closure_limit=0) must agree exactly."""
-    pts = _pts(spark)
-    feats = testdata.holed_features(spark)
-    idx = sj.build_cell_index_general(spark, feats)
-    rings = fixtures.multiring_rings()
-    a = _hits_set(sj.pip_attribute_auto(pts, idx, rings=rings))
-    b = _hits_set(sj.pip_attribute_auto(pts, idx, rings=rings, closure_limit=0))
-    assert a == b and len(a) > 0
-
-
 def test_rect_decomposition_matches_signed_shoelace():
     """The oracle's signed rect decomposition of every holed feature must
     reproduce the rings' signed shoelace areas exactly — pins both the
@@ -108,9 +71,10 @@ def test_rect_decomposition_matches_signed_shoelace():
 
 
 def test_grouped_kernel_scales_past_closure_size(spark):
-    """10,000 axis-aligned boxes flow entirely through the plan (cell
-    index + cogrouped ring join) — no Python dict of 10k rings anywhere.
-    Oracle: containment in an axis-aligned box is pure column math."""
+    """10,000 axis-aligned boxes through the general cover and the
+    even-odd kernel, whose ring dict rides the UDF closure — a layer
+    far past dim size. Oracle: containment in an axis-aligned box is
+    pure column math."""
     n_side = 100  # 100 x 100 boxes over lon [-180,180) x lat [-85,85)
     bw, bh = 360.0 / n_side, 170.0 / n_side
     boxes = (
@@ -130,7 +94,12 @@ def test_grouped_kernel_scales_past_closure_size(spark):
     )
     pts = _pts(spark).filter(F.col("lat") < 84.9)  # stay inside the box sheet
     idx = sj.build_cell_index_general(spark, boxes, res=6)
-    got = sj.pip_attribute_grouped(pts, idx, boxes, res=6)
+    rings = {
+        r["poly_id"]: np.column_stack([r["xs"], r["ys"]])
+        for r in boxes.select("poly_id", "xs", "ys").collect()
+    }
+    assert len(rings) == n_side * n_side
+    got = sj.pip_attribute_general(pts, idx, rings, res=6)
 
     # analytic truth: box index from floor math (half-open boxes [lo, hi))
     want = pts.select(
