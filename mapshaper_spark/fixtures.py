@@ -1228,11 +1228,9 @@ def ahash64(px: np.ndarray, w: int, h: int) -> np.int64:
     blocks = gray[: bh * 8, : bw * 8].reshape(8, bh, 8, bw).sum(axis=(1, 3))
     # compare block means without division: block_sum * 64 vs total_sum
     total = blocks.sum(dtype=np.uint64)
-    bits = (blocks.astype(np.uint64) * 64 > total).astype(np.uint64).ravel()
-    out = np.uint64(0)
-    for b in bits:
-        out = (out << np.uint64(1)) | b
-    return out.astype(np.int64)
+    bits = (blocks.astype(np.uint64) * 64 > total).ravel()
+    # 64 bits, first bit most significant, read as one big-endian word
+    return np.packbits(bits, bitorder="big").view(">u8")[0].astype(np.int64)
 
 
 def image_lonlat(i: int) -> tuple[float, float]:

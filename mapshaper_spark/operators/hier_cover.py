@@ -91,7 +91,8 @@ def build_cell_index_hier(
     min_res: int = DEFAULT_MIN_RES,
     max_res: int = DEFAULT_MAX_RES,
 ) -> DataFrame:
-    """Mixed-resolution cover index: (cell_id, poly_id, coverage)."""
+    """Mixed-resolution cover index: (cell_id, poly_id, coverage) plus
+    the polygon's edge columns (``spatial_join.with_edges``)."""
 
     def cover(pdf: pd.DataFrame) -> pd.DataFrame:
         rows = []
@@ -101,25 +102,24 @@ def build_cell_index_hier(
                 rows.append({"cell_id": cid, "poly_id": row["poly_id"], "coverage": cov})
         return pd.DataFrame(rows, columns=["cell_id", "poly_id", "coverage"])
 
-    return polygons.groupBy("poly_id").applyInPandas(
+    cover_rows = polygons.groupBy("poly_id").applyInPandas(
         cover, schema="cell_id long, poly_id int, coverage string"
     )
+    return with_edges(cover_rows, polygons)
 
 
 def pip_attribute_hier(
     points: DataFrame,
     hier_index: DataFrame,
-    rings: dict[int, np.ndarray] | None = None,
     min_res: int = DEFAULT_MIN_RES,
     max_res: int = DEFAULT_MAX_RES,
 ) -> DataFrame:
     """PIP attribution against the mixed-resolution cover: each point
     explodes to its cell id at every level (pure column math), one
     broadcast equi-join, exact kernel only on PARTIAL leaves."""
-    idx, k = with_edges(hier_index, rings)
     level_cells = F.array(
         *[F.expr(cells.cell_sql("lon", "lat", r)) for r in range(min_res, max_res + 1)]
     )
     pts = points.withColumn("cell_id", F.explode(level_cells))
-    cand = pts.join(F.broadcast(idx), "cell_id")
-    return keep_inside(cand, k)
+    cand = pts.join(F.broadcast(hier_index), "cell_id")
+    return keep_inside(cand)

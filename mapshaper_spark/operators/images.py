@@ -79,26 +79,24 @@ def verify_invariants(images: DataFrame, passthrough: list[str] | None = None) -
     def run(it):
         for pdf in it:
             out = []
-            for idx_row, (img_id, buf, w, h, fmt, caption, phash) in enumerate(
-                zip(
-                    pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"],
-                    pdf["fmt"], pdf["caption"], pdf["phash"],
-                )
+            for img_id, buf, w, h, fmt, caption, phash in zip(
+                pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"],
+                pdf["fmt"], pdf["caption"], pdf["phash"],
             ):
                 px = decode(buf, w, h, fmt)
                 ph = int(fixtures.ahash64(px, w, h))
                 p = geometry.psnr(px, quantize(px))
                 i = int(img_id[3:])
-                rec = {
-                    "image_id": img_id,
-                    "phash_ok": ph == int(phash),
-                    "psnr_db": float(min(p, 1e6)),
-                    "caption_ok": caption == fixtures.make_caption(i),
-                }
-                for c in passthrough:
-                    rec[c] = pdf[c].iloc[idx_row]
-                out.append(rec)
-            yield pd.DataFrame(out, columns=base + passthrough)
+                out.append((
+                    img_id,
+                    ph == int(phash),
+                    float(min(p, 1e6)),
+                    caption == fixtures.make_caption(i),
+                ))
+            res = pd.DataFrame(out, columns=base)
+            for c in passthrough:
+                res[c] = pdf[c].to_numpy()
+            yield res
 
     extra = "".join(
         f", {f.name} {f.dataType.simpleString()}"

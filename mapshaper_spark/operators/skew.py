@@ -27,11 +27,10 @@ distributed concern [SURVEY.md §4.2 item 4].
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .spatial_join import DEFAULT_RES, keep_inside, with_cell, with_edges
+from .spatial_join import DEFAULT_RES, keep_inside, with_cell
 
 
 def cell_salt_factors(
@@ -117,7 +116,6 @@ def salted_equi_join(
 def pip_attribute_salted(
     points: DataFrame,
     cell_index: DataFrame,
-    rings: dict[int, np.ndarray] | None = None,
     res: int = DEFAULT_RES,
     target_rows_per_task: int = 250_000,
     hot_threshold: int | None = None,
@@ -135,7 +133,6 @@ def pip_attribute_salted(
     (e.g. the raw column-pruned scan when ``points`` sits downstream of
     an expensive map stage — sampling cannot push through a UDF).
     """
-    idx, k = with_edges(cell_index, rings)
     pts = with_cell(points, res)
     stats_src = with_cell(stats_points, res) if stats_points is not None else pts
     factors = cell_salt_factors(
@@ -144,5 +141,5 @@ def pip_attribute_salted(
     # hint shuffle_hash: keep it a shuffled (not broadcast) join so the
     # salting is actually exercised; at production scale Spark would pick
     # this shape on its own once the index exceeds the broadcast limit.
-    cand = salted_equi_join(pts, idx.hint("shuffle_hash"), "cell_id", factors, "point_id")
-    return keep_inside(cand, k)
+    cand = salted_equi_join(pts, cell_index.hint("shuffle_hash"), "cell_id", factors, "point_id")
+    return keep_inside(cand)

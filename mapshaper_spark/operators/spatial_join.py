@@ -6,18 +6,19 @@ north_rule]):
 1. Build a ``cell_index`` relation (cell_id, poly_id, coverage) by
    covering every polygon's bbox with grid cells and classifying each as
    FULL (cell entirely inside the polygon — exact for convex polygons:
-   all four corners inside) or PARTIAL (bbox overlap only).
+   all four corners inside) or PARTIAL (bbox overlap only). The builder
+   also appends each row's polygon edges as half-plane columns
+   (``with_edges``, once per index), so the index is self-contained.
 
 2. Points get a ``cell_id`` column (pure column math, no UDF), then an
-   equi-join against the index. Each index row carries its polygon's
-   edges as half-plane columns (``with_edges``, joined on poly_id before
-   the broadcast), so the exact test is one codegen'd JVM filter
-   (``keep_inside``): FULL matches pass untested, PARTIAL matches must
-   satisfy every half-plane — the same IEEE expression as
-   ``geometry.pip_convex`` and the DuckDB oracle. No row crosses into
-   Python. On a real cluster the index is dim-sized → ``F.broadcast`` →
-   the whole attribution is a map-side join with zero shuffle of the
-   fact table.
+   equi-join against the index, then one codegen'd JVM filter
+   (``keep_inside``) over the edge columns the index rows carry: FULL
+   matches pass untested, PARTIAL matches must satisfy every half-plane
+   — the same IEEE expression as ``geometry.pip_convex`` and the DuckDB
+   oracle. No row crosses into Python, and a join is the equi-join plus
+   that filter. On a real cluster the index is dim-sized →
+   ``F.broadcast`` → the whole attribution is a map-side join with zero
+   shuffle of the fact table.
 
 Upstream analog: mapshaper's point-polygon join walks a bbox path index
 then runs a ray-crossing test per candidate [SURVEY.md §2.3]; the cell
@@ -48,9 +49,10 @@ def with_cell(df: DataFrame, res: int = DEFAULT_RES, lon: str = "lon", lat: str 
 
 
 def build_cell_index(spark: SparkSession, polygons: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
-    """cell_id → (poly_id, coverage) cover relation, built distributively
-    (one applyInPandas group per polygon — each polygon enumerates its own
-    covering cells with numpy, so a million-polygon layer parallelizes)."""
+    """cell_id → (poly_id, coverage, edge columns) cover relation, built
+    distributively (one applyInPandas group per polygon — each polygon
+    enumerates its own covering cells with numpy, so a million-polygon
+    layer parallelizes); :func:`with_edges` appends the edges."""
     n = 1 << res
 
     def cover(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -91,56 +93,58 @@ def build_cell_index(spark: SparkSession, polygons: DataFrame, res: int = DEFAUL
              "coverage": pd.Series(dtype="object")}
         )
 
-    return polygons.groupBy("poly_id").applyInPandas(
+    cover_rows = polygons.groupBy("poly_id").applyInPandas(
         cover, schema="cell_id long, poly_id int, coverage string"
     )
+    return with_edges(cover_rows, polygons)
 
 
 def _edge_columns(k: int) -> list[str]:
     return [f"{name}{j}" for j in range(k) for name in ("_hdx", "_hdy", "_hx", "_hy")]
 
 
-def with_edges(df: DataFrame, rings: dict[int, np.ndarray] | None = None) -> tuple[DataFrame, int]:
-    """(``df`` with edge columns appended, K): every row of ``df`` (a
-    frame with ``poly_id``, e.g. the cell index) gains its polygon's K
-    edges as half-plane columns ``_hdx{j}, _hdy{j}, _hx{j}, _hy{j}``.
-    ``rings`` defaults to the fixture layer.
+def with_edges(cover: DataFrame, polygons: DataFrame) -> DataFrame:
+    """``cover`` with its polygons' edges appended: every row (keyed by
+    ``poly_id``) gains the K edges of its ring in the one-ring-per-row
+    layer ``polygons`` as half-plane columns ``_hdx{j}, _hdy{j}, _hx{j},
+    _hy{j}``. The index builders call this once, so every join reads
+    the edges off the index.
 
-    K is the layer's largest vertex count. ``dx``/``dy`` are computed
-    here in numpy, in the ring's own dtype, exactly as
+    The layer is dim-sized and collected on the driver. K is its largest
+    vertex count. ``dx``/``dy`` are computed here in numpy, exactly as
     ``geometry.pip_convex`` computes them, so :func:`keep_inside` sees
     bit-identical operands. A ring with fewer than K edges repeats its
     edge 0: A AND A = A, exact for every input including NaN and ±inf
     (a zero-padded edge would evaluate ``0 * inf``).
-
-    The join is a LEFT join, so a poly_id missing from ``rings`` keeps
-    its rows with null edges and :func:`keep_inside` fails loudly on
-    them instead of silently dropping candidates.
     """
-    rings = fixture_rings() if rings is None else rings
-    if not rings:
-        raise ValueError("convex PIP needs a non-empty rings dict (poly_id -> ring)")
-    arrs = [np.asarray(r) for r in rings.values()]
-    k = max(len(r) for r in arrs)
-    planes = np.empty((len(arrs), 4 * k))
-    for i, ring in enumerate(arrs):
+    rows = polygons.select("poly_id", "xs", "ys").collect()
+    rings = {r["poly_id"]: np.column_stack([r["xs"], r["ys"]]) for r in rows}
+    if len(rings) != len(rows):
+        raise ValueError("a convex cell index needs one ring per poly_id")
+    k = max((len(r) for r in rings.values()), default=1)
+    planes = np.empty((len(rings), 4 * k))
+    for i, ring in enumerate(rings.values()):
         x1, y1 = ring[:, 0], ring[:, 1]
         x2, y2 = np.roll(x1, -1), np.roll(y1, -1)
         pad = np.r_[np.arange(len(ring)), np.zeros(k - len(ring), dtype=int)]
         planes[i] = np.column_stack([x2 - x1, y2 - y1, x1, y1])[pad].ravel()
     # a pyarrow table becomes a LocalRelation (no Python worker) and,
     # unlike a pandas frame, keeps NaN distinct from null
-    cols = {"poly_id": pa.array(np.fromiter(rings, dtype=np.int32, count=len(arrs)))}
+    cols = {"poly_id": pa.array(np.fromiter(rings, dtype=np.int32, count=len(rings)))}
     cols.update((c, pa.array(planes[:, j])) for j, c in enumerate(_edge_columns(k)))
-    edges = df.sparkSession.createDataFrame(pa.table(cols))
-    out = df.join(F.broadcast(edges), "poly_id", "left").select(*df.columns, *_edge_columns(k))
-    return out, k
+    edges = cover.sparkSession.createDataFrame(pa.table(cols))
+    return cover.join(F.broadcast(edges), "poly_id").select(*cover.columns, *_edge_columns(k))
 
 
-def keep_inside(cand: DataFrame, k: int) -> DataFrame:
+def keep_inside(cand: DataFrame) -> DataFrame:
     """Exact convex PIP over candidate rows carrying ``lon``, ``lat``,
-    ``coverage`` and the edge columns of :func:`with_edges`: FULL rows pass untested, PARTIAL rows pass iff every
-    half-plane holds. Drops ``coverage`` and the edge columns.
+    ``coverage`` and the index's edge columns (:func:`with_edges`; K is
+    read off the ``_hdx*`` columns): FULL rows pass untested, PARTIAL
+    rows pass iff every half-plane holds. Every index row comes from the
+    polygon whose ring produced its edges, so there is no missing-ring
+    case at run time; an index with no edge columns at all (not built by
+    ``build_cell_index`` or ``build_cell_index_hier``) raises here, on
+    the driver. Drops ``coverage`` and the edge columns.
 
     The test is one codegen'd JVM predicate with the IEEE expression of
     ``geometry.pip_convex`` and the DuckDB oracle (Java never fuses it
@@ -158,37 +162,27 @@ def keep_inside(cand: DataFrame, k: int) -> DataFrame:
     than the UDF (the generated method outgrows the JIT's size limit
     and stays interpreted).
     """
+    k = sum(c.startswith("_hdx") for c in cand.columns)
+    if not k:
+        raise ValueError(
+            "cell index has no edge columns: build it with build_cell_index(_hier)"
+        )
     planes = [
         f"nanvl(_hdx{j} * (lat - _hy{j}) - _hdy{j} * (lon - _hx{j}), -1.0D) >= 0.0D"
         for j in range(k)
     ]
-    missing = F.raise_error(
-        F.concat(F.lit("no ring for poly_id "), F.col("poly_id").cast("string"))
-    )
-    keep = (F.col("coverage") == FULL) | F.when(
-        F.col("_hdx0").isNull(), missing
-    ).otherwise(F.expr(" AND ".join(planes)))
+    keep = (F.col("coverage") == FULL) | F.expr(" AND ".join(planes))
     return cand.filter(keep).drop("coverage", *_edge_columns(k))
 
 
-def fixture_rings() -> dict[int, np.ndarray]:
-    return {p["poly_id"]: np.asarray(p["ring"]) for p in fixtures.POLYGONS}
-
-
-def pip_attribute(
-    points: DataFrame,
-    cell_index: DataFrame,
-    rings: dict[int, np.ndarray] | None = None,
-    res: int = DEFAULT_RES,
-) -> DataFrame:
+def pip_attribute(points: DataFrame, cell_index: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     """Attach poly_id to every point inside a polygon (inner join shape).
 
     Returns points x matched polygons (a point in two overlapping
     polygons yields two rows — same semantics as the all-pairs oracle).
     """
-    idx, k = with_edges(cell_index, rings)
-    cand = with_cell(points, res).join(F.broadcast(idx), "cell_id")
-    return keep_inside(cand, k)
+    cand = with_cell(points, res).join(F.broadcast(cell_index), "cell_id")
+    return keep_inside(cand)
 
 
 def _as_ring_list(rings) -> list[np.ndarray]:
@@ -308,16 +302,12 @@ def pip_attribute_general(
 
 
 def clip_points(
-    points: DataFrame,
-    cell_index: DataFrame,
-    rings: dict[int, np.ndarray] | None = None,
-    res: int = DEFAULT_RES,
-    invert: bool = False,
+    points: DataFrame, cell_index: DataFrame, res: int = DEFAULT_RES, invert: bool = False
 ) -> DataFrame:
     """mapshaper ``-clip`` on a point layer: keep points inside the clip
     polygons (``-erase`` when invert=True) — a spatial semi/anti join.
     """
-    matched = pip_attribute(points, cell_index, rings, res).select("point_id").distinct()
+    matched = pip_attribute(points, cell_index, res).select("point_id").distinct()
     how = "left_anti" if invert else "left_semi"
     return points.join(matched, "point_id", how)
 
@@ -344,13 +334,12 @@ def polygon_point_agg(
     points: DataFrame,
     cell_index: DataFrame,
     value_col: str,
-    rings: dict[int, np.ndarray] | None = None,
     res: int = DEFAULT_RES,
 ) -> DataFrame:
     """polygon→point join [-join with calc=]: aggregate contained points'
     attrs onto each polygon. Partial aggregation is map-side (Spark's
     hash-agg does the combine before the tiny 16-key shuffle)."""
-    hits = pip_attribute(points, cell_index, rings, res)
+    hits = pip_attribute(points, cell_index, res)
     return hits.groupBy("poly_id").agg(
         F.count(F.lit(1)).alias("n_points"),
         F.round(
@@ -378,10 +367,10 @@ def fuzzy_join(
     Engine shape:
 
     1. containment rides the existing two-phase cell join
-       (``pip_attribute`` over the rings of ``polygons`` — FULL cells
-       skip geometry); a point in
-       several polygons dedups to the smallest poly_id (upstream keeps
-       one match);
+       (``pip_attribute`` over ``cell_index``, which carries the edges
+       of the layer it was built from — FULL cells skip geometry); a
+       point in several polygons dedups to the smallest poly_id
+       (upstream keeps one match);
     2. ONLY the misses (anti-join) enter the fallback: candidates =
        broadcast bbox+radius prefilter (a point within ``radius`` of a
        boundary is always inside the bbox expanded by ``radius``), then
@@ -404,11 +393,7 @@ def fuzzy_join(
 
     Returns (point_id, poly_id, fuzzy) — fuzzy=0 containment, 1 radius.
     """
-    rings = {
-        r["poly_id"]: np.column_stack([r["xs"], r["ys"]])
-        for r in polygons.select("poly_id", "xs", "ys").collect()
-    }
-    hits = pip_attribute(points, cell_index, rings, res)
+    hits = pip_attribute(points, cell_index, res)
     pip_best = (
         hits.groupBy("point_id")
         .agg(F.min("poly_id").alias("poly_id"))

@@ -94,9 +94,11 @@ def stream_static_cell_join(
     points_stream: DataFrame, cell_index: DataFrame, res: int = 6
 ) -> DataFrame:
     """Stream–static spatial join: live points against the static (and
-    broadcastable) cell index — live PIP candidate attribution. The
-    exact-kernel refinement runs identically on the stream (pandas UDF
-    filters are supported in streaming plans)."""
+    broadcastable) cell index — live PIP candidate attribution. The join
+    keeps every index column, edge columns included, so
+    ``spatial_join.keep_inside`` refines the candidates on the stream
+    exactly as on a batch; projecting the index to (cell_id, poly_id,
+    coverage) would make that refinement impossible."""
     pts = points_stream.withColumn("cell_id", F.expr(cells.cell_sql("lon", "lat", res)))
     return pts.join(F.broadcast(cell_index), "cell_id")
 

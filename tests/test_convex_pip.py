@@ -1,32 +1,97 @@
-"""Convex PIP as a JVM half-plane filter: a polygon the index names but
-the rings do not must fail loudly, never drop candidates silently; short
-rings are padded by repeating edge 0."""
+"""Convex PIP as a JVM half-plane filter over edge columns the cell
+index carries: every caller answers for the layer its index was built
+from (no fixture default), an index without edge columns fails loudly,
+and short rings are padded by repeating edge 0."""
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from mapshaper_spark import fixtures
+from mapshaper_spark import fixtures, geometry
 from mapshaper_spark.operators import hier_cover as hier_op
 from mapshaper_spark.operators import skew as skew_op
 from mapshaper_spark.operators import spatial_join as sj
+from mapshaper_spark.sources import testdata
 
 _CALLERS = {
-    "broadcast": lambda pts, idx, rings: sj.pip_attribute(pts, idx, rings),
-    "salted": lambda pts, idx, rings: skew_op.pip_attribute_salted(
-        pts, idx, rings, target_rows_per_task=1
-    ),
-    "hier": lambda pts, idx, rings: hier_op.pip_attribute_hier(
-        pts, idx, rings, min_res=sj.DEFAULT_RES, max_res=sj.DEFAULT_RES
+    "broadcast": lambda pts, idx: sj.pip_attribute(pts, idx),
+    "salted": lambda pts, idx: skew_op.pip_attribute_salted(pts, idx, target_rows_per_task=1),
+    "hier": lambda pts, idx: hier_op.pip_attribute_hier(
+        pts, idx, min_res=sj.DEFAULT_RES, max_res=sj.DEFAULT_RES
     ),
 }
 
+# the fixture rings moved by an offset that is no multiple of the res-6
+# cell size (5.625 x 2.8125 degrees), so cover and FULL/PARTIAL split
+# differ from the fixture layer's
+_OFFSET = (-3.3, 1.7)
+_LAYER = [
+    {**p, "ring": [(x + _OFFSET[0], y + _OFFSET[1]) for x, y in p["ring"]]}
+    for p in fixtures.POLYGONS
+]
 
-def _points(spark):
+
+def _layer_df(spark):
     return spark.createDataFrame(
-        [(0, 1.0, 1.0), (1, 30.0, -20.0)], "point_id long, lon double, lat double"
+        fixtures.polygons_pdf(_LAYER),
+        schema="poly_id int, name string, xs array<double>, ys array<double>",
     )
+
+
+def _layer_points(spark):
+    """Uniform points over the layer plus every ring vertex and edge
+    midpoint (boundary cases), with the brute-force pip_convex pairs."""
+    rng = np.random.default_rng(17)
+    rings = {p["poly_id"]: np.asarray(p["ring"]) for p in _LAYER}
+    xs, ys = [rng.uniform(-180.0, 180.0, 6000)], [rng.uniform(-80.0, 60.0, 6000)]
+    for ring in rings.values():
+        mid = (ring + np.roll(ring, -1, axis=0)) / 2.0
+        xs += [ring[:, 0], mid[:, 0]]
+        ys += [ring[:, 1], mid[:, 1]]
+    lon, lat = np.concatenate(xs), np.concatenate(ys)
+    ids = np.arange(len(lon))
+    pdf = pd.DataFrame({"point_id": ids, "lon": lon, "lat": lat, "v": (ids % 7).astype(float)})
+    pts = spark.createDataFrame(pdf, "point_id long, lon double, lat double, v double")
+    want = {
+        (int(i), pid)
+        for pid, ring in rings.items()
+        for i in ids[geometry.pip_convex(lon, lat, ring)]
+    }
+    assert len(want) > 500
+    return pts, pdf, want
+
+
+def test_callers_match_pip_convex_on_own_layer(spark):
+    """Broadcast, salted, hier, clip/erase and polygon_point_agg over an
+    index of a non-fixture layer, with no rings argument, equal the
+    brute-force ``geometry.pip_convex`` answer."""
+    polys = _layer_df(spark)
+    pts, pdf, want = _layer_points(spark)
+    flat = sj.build_cell_index(spark, polys)
+    hier = hier_op.build_cell_index_hier(spark, polys)
+
+    def pairs(df):
+        return {(r["point_id"], r["poly_id"]) for r in df.collect()}
+
+    assert pairs(sj.pip_attribute(pts, flat)) == want
+    assert pairs(skew_op.pip_attribute_salted(pts, flat, target_rows_per_task=20)) == want
+    assert pairs(hier_op.pip_attribute_hier(pts, hier)) == want
+
+    inside = {i for i, _ in want}
+    assert {r["point_id"] for r in sj.clip_points(pts, flat).collect()} == inside
+    erased = {r["point_id"] for r in sj.clip_points(pts, flat, invert=True).collect()}
+    assert erased == set(pdf["point_id"]) - inside
+
+    agg = {r["poly_id"]: (r["n_points"], r["sum_value"]) for r in
+           sj.polygon_point_agg(pts, flat, "v").collect()}
+    v = pdf["v"].to_numpy()
+    by_poly: dict[int, list[int]] = {}
+    for i, pid in want:
+        by_poly.setdefault(pid, []).append(i)
+    assert agg == {pid: (len(ix), float(v[ix].sum())) for pid, ix in by_poly.items()}
 
 
 def _index(pts, poly_id: int, coverage: str):
@@ -39,34 +104,43 @@ def _index(pts, poly_id: int, coverage: str):
 
 @pytest.mark.parametrize("caller", sorted(_CALLERS))
 def test_partial_row_without_ring_raises(spark, caller):
-    pts = _points(spark)
-    idx = _index(pts, 99, sj.PARTIAL)
-    out = _CALLERS[caller](pts, idx, sj.fixture_rings())
-    with pytest.raises(Exception, match="no ring for poly_id 99"):
-        out.collect()
+    # an index that carries no edge columns (not built by a convex
+    # builder) fails on the driver instead of dropping PARTIAL rows
+    pts = spark.createDataFrame(
+        [(0, 1.0, 1.0), (1, 30.0, -20.0)], "point_id long, lon double, lat double"
+    )
+    with pytest.raises(ValueError, match="no edge columns"):
+        _CALLERS[caller](pts, _index(pts, 99, sj.PARTIAL))
 
 
-def test_full_row_without_ring_passes_untested(spark):
-    # FULL rows never read their ring, as with the kernel before
-    pts = _points(spark)
-    out = sj.pip_attribute(pts, _index(pts, 99, sj.FULL), sj.fixture_rings())
-    assert sorted(r["point_id"] for r in out.collect()) == [0, 1]
+def test_duplicate_poly_id_raises(spark):
+    two = [dict(p, poly_id=0) for p in _LAYER[:2]]
+    polys = spark.createDataFrame(
+        fixtures.polygons_pdf(two),
+        schema="poly_id int, name string, xs array<double>, ys array<double>",
+    )
+    with pytest.raises(ValueError, match="one ring per poly_id"):
+        sj.build_cell_index(spark, polys)
 
 
-@pytest.mark.parametrize("caller", sorted(_CALLERS))
-def test_empty_rings_raise_on_driver(spark, caller):
-    pts = _points(spark)
-    with pytest.raises(ValueError, match="non-empty rings"):
-        _CALLERS[caller](pts, _index(pts, 0, sj.PARTIAL), {})
+def test_empty_layer_matches_nothing(spark):
+    polys = spark.createDataFrame([], "poly_id int, xs array<double>, ys array<double>")
+    pts = spark.createDataFrame([(0, 1.0, 1.0)], "point_id long, lon double, lat double")
+    assert sj.pip_attribute(pts, sj.build_cell_index(spark, polys)).count() == 0
+    assert hier_op.pip_attribute_hier(pts, hier_op.build_cell_index_hier(spark, polys)).count() == 0
 
 
 def test_short_rings_padded_with_edge_zero(spark):
-    # a triangle beside an octagon: K = 8, the triangle repeats edge 0
-    tri = next(p for p in fixtures.POLYGONS if len(p["ring"]) == 3)
-    one = spark.createDataFrame([(tri["poly_id"],)], "poly_id int")
-    edged, k = sj.with_edges(one)
+    # a triangle beside an octagon: K = 8, the triangle repeats edge 0,
+    # and edge j holds numpy's (dx, dy, x1, y1) bit for bit
+    idx = sj.build_cell_index(spark, testdata.polygons(spark))
+    k = sum(c.startswith("_hdx") for c in idx.columns)
     assert k == max(len(p["ring"]) for p in fixtures.POLYGONS)
-    row = edged.first()
-    for j in range(3, k):
-        for c in ("_hdx", "_hdy", "_hx", "_hy"):
-            assert row[f"{c}{j}"] == row[f"{c}0"]
+    tri = next(p for p in fixtures.POLYGONS if len(p["ring"]) == 3)
+    row = idx.filter(F.col("poly_id") == tri["poly_id"]).first()
+    ring = np.asarray(tri["ring"])
+    nxt = np.roll(ring, -1, axis=0)
+    for j in range(k):
+        e = j if j < 3 else 0
+        want = (nxt[e, 0] - ring[e, 0], nxt[e, 1] - ring[e, 1], ring[e, 0], ring[e, 1])
+        assert tuple(row[f"{c}{j}"] for c in ("_hdx", "_hdy", "_hx", "_hy")) == want

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import numpy as np
-
 from mapshaper_spark.operators import spatial_join as sj
 
 
@@ -16,11 +14,7 @@ def _layer(spark):
         ],
         "poly_id int, name string, xs array<double>, ys array<double>",
     )
-    rings = {
-        0: np.array([[0.0, 0.0], [4.0, 0.0], [4.0, 4.0], [0.0, 4.0]]),
-        1: np.array([[14.0, 0.0], [18.0, 0.0], [18.0, 4.0], [14.0, 4.0]]),
-    }
-    return polys, rings
+    return polys
 
 
 def _fuzzy(spark, pts, polys, radius):
@@ -30,7 +24,7 @@ def _fuzzy(spark, pts, polys, radius):
 
 
 def test_fuzzy_join_kinds_and_drops(spark):
-    polys, rings = _layer(spark)
+    polys = _layer(spark)
     idx = sj.build_cell_index(spark, polys)
     pts = spark.createDataFrame(
         [
@@ -41,7 +35,7 @@ def test_fuzzy_join_kinds_and_drops(spark):
         ],
         "point_id long, lon double, lat double",
     )
-    hits = sj.pip_attribute(pts, idx, rings=rings)
+    hits = sj.pip_attribute(pts, idx)
     assert {(r["point_id"], r["poly_id"]) for r in hits.collect()} == {(0, 0)}
 
     out = _fuzzy(spark, pts, polys, radius=2.0)
@@ -52,7 +46,7 @@ def test_fuzzy_join_uses_callers_layer(spark):
     """Containment is tested against the ``polygons`` argument's own
     rings, not the default fixture layer: the point inside square a
     comes back as fuzzy=0."""
-    polys, _ = _layer(spark)
+    polys = _layer(spark)
     pts = spark.createDataFrame(
         [(0, 2.0, 2.0), (1, 5.5, 2.0), (2, 12.5, 2.0)],
         "point_id long, lon double, lat double",
@@ -62,7 +56,7 @@ def test_fuzzy_join_uses_callers_layer(spark):
 
 
 def test_fuzzy_join_tie_breaks_to_smaller_poly_id(spark):
-    polys, _ = _layer(spark)
+    polys = _layer(spark)
     # exact midpoint between the two facing edges (x=4 and x=14)
     pts = spark.createDataFrame(
         [(0, 9.0, 2.0)], "point_id long, lon double, lat double"
@@ -72,7 +66,7 @@ def test_fuzzy_join_tie_breaks_to_smaller_poly_id(spark):
 
 
 def test_fuzzy_radius_boundary_is_inclusive(spark):
-    polys, _ = _layer(spark)
+    polys = _layer(spark)
     pts = spark.createDataFrame(
         [(0, 6.0, 2.0), (1, 6.5, 2.0)],
         "point_id long, lon double, lat double",

@@ -7,7 +7,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from mapshaper_spark import fixtures
+from mapshaper_spark import fixtures, geometry
 from mapshaper_spark.operators import images as images_op
 
 
@@ -18,6 +18,34 @@ def test_invariants_all_pass(spark):
     assert all(r["phash_ok"] for r in rows), "phash recompute mismatch"
     assert all(r["caption_ok"] for r in rows), "caption inequality"
     assert min(r["psnr_db"] for r in rows) >= 40.0, "lossy roundtrip below 40dB"
+
+
+def test_verify_invariants_matches_per_row_reference(spark):
+    """Whole-column passthrough gives the frame a per-row loop builds:
+    same rows, values and dtypes (passthrough columns come out in the
+    input schema's order)."""
+    import pandas as pd
+
+    imgs = fixtures.images_df(spark, 48, partitions=3)
+    got = (
+        images_op.verify_invariants(imgs, passthrough=["lon", "lat", "w"])
+        .toPandas().sort_values("image_id").reset_index(drop=True)
+    )
+    rows = []
+    for r in imgs.orderBy("image_id").collect():
+        px = images_op.decode(r["bytes"], r["w"], r["h"], r["fmt"])
+        p = geometry.psnr(px, images_op.quantize(px))
+        rows.append({
+            "image_id": r["image_id"],
+            "phash_ok": int(fixtures.ahash64(px, r["w"], r["h"])) == r["phash"],
+            "psnr_db": float(min(p, 1e6)),
+            "caption_ok": r["caption"] == fixtures.make_caption(int(r["image_id"][3:])),
+            "w": r["w"],
+            "lon": r["lon"],
+            "lat": r["lat"],
+        })
+    want = pd.DataFrame(rows).astype({"w": "int32"})
+    pd.testing.assert_frame_equal(got, want)
 
 
 def test_thumbnails_shape_and_determinism(spark):
@@ -50,7 +78,7 @@ def test_frame_sample_plumbing(spark):
     import numpy as np
     import pandas as pd
 
-    from mapshaper_spark import fixtures
+    from mapshaper_spark import fixtures, geometry
     from mapshaper_spark.operators import images as images_op
 
     w = h = 16

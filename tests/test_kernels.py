@@ -226,6 +226,41 @@ def test_ahash_deterministic_and_recomputable():
     assert int(fixtures.ahash64(px, r1["w"], r1["h"])) == r1["phash"]
 
 
+def _ahash64_shift_loop(px, w, h):
+    """The 64-step shift-and-or form ``fixtures.ahash64`` replaced."""
+    gray = px.astype(np.uint32).sum(axis=2)
+    bh, bw = h // 8, w // 8
+    blocks = gray[: bh * 8, : bw * 8].reshape(8, bh, 8, bw).sum(axis=(1, 3))
+    total = blocks.sum(dtype=np.uint64)
+    out = np.uint64(0)
+    for b in (blocks.astype(np.uint64) * 64 > total).astype(np.uint64).ravel():
+        out = (out << np.uint64(1)) | b
+    return out.astype(np.int64)
+
+
+def test_ahash64_matches_shift_loop():
+    """The packbits word is bit-identical to the shift loop on every
+    (w, h) size class: random images (about half set the sign bit), a
+    flat image (all bits 0) and a one-bright-block image (bit 63 only,
+    the most negative hash)."""
+    rng = np.random.default_rng(5)
+    signs = set()
+    for w in fixtures.IMG_SIZES:
+        for h in fixtures.IMG_SIZES:
+            flat = np.full((h, w, 3), 77, dtype=np.uint8)
+            corner = np.zeros((h, w, 3), dtype=np.uint8)
+            corner[: h // 8, : w // 8] = 255
+            imgs = [flat, corner] + [rng.integers(0, 256, (h, w, 3), dtype=np.uint8) for _ in range(40)]
+            for px in imgs:
+                got = fixtures.ahash64(px, w, h)
+                assert type(got) is np.int64
+                assert got == _ahash64_shift_loop(px, w, h)
+                signs.add(bool(got < 0))
+            assert fixtures.ahash64(flat, w, h) == 0
+            assert fixtures.ahash64(corner, w, h) == np.iinfo(np.int64).min
+    assert signs == {True, False}
+
+
 def test_psnr_quantization_above_40db():
     """The 'lossy' stand-in (2-LSB quantization) stays above the 40 dB
     gate [BASELINE.json input_hint PSNR>=40dB]."""

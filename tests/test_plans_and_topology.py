@@ -3,6 +3,8 @@ arc-dictionary topology build."""
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 from pyspark.sql import functions as F
 
@@ -38,6 +40,20 @@ def test_pip_uses_broadcast_join(spark):
     idx = sj.build_cell_index(spark, testdata.polygons(spark))
     plan = _plan(sj.pip_attribute(pts, idx))
     assert "BroadcastHashJoin" in plan
+    _assert_no_python_eval(plan)
+
+
+def test_pip_over_checkpointed_index_is_one_broadcast_join(spark):
+    """The edges ride the index: over a checkpointed index, a PIP join
+    plans exactly one join (the broadcast on cell_id) and builds no
+    per-call edge table (no LocalTableScan)."""
+    pts = testdata.customer_points(spark, SF_SMOKE)
+    idx = sj.build_cell_index(spark, testdata.polygons(spark)).localCheckpoint()
+    plan = _plan(sj.pip_attribute(pts, idx))
+    joins = re.findall(r"\b\w*(?:HashJoin|SortMergeJoin|NestedLoopJoin)\b \[([^\]]*)\]", plan)
+    assert len(joins) == 1 and "cell_id" in joins[0], plan
+    assert "BroadcastHashJoin" in plan
+    assert "LocalTableScan" not in plan
     _assert_no_python_eval(plan)
 
 

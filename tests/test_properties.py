@@ -1222,9 +1222,14 @@ def test_convex_pip_filter_matches_pip_convex(p):
         ],
         "point_id int, poly_id int, lon double, lat double, coverage string",
     )
-    with_e, k = sj.with_edges(cand, rings)
-    assert k == 64
-    got_df = sj.keep_inside(with_e, k)
+    polys = spark.createDataFrame(
+        [(int(q), [float(x) for x in ring[:, 0]], [float(y) for y in ring[:, 1]])
+         for q, ring in rings.items()],
+        "poly_id int, xs array<double>, ys array<double>",
+    )
+    with_e = sj.with_edges(cand, polys)
+    assert sum(c.startswith("_hdx") for c in with_e.columns) == 64
+    got_df = sj.keep_inside(with_e)
     assert got_df.columns == ["point_id", "poly_id", "lon", "lat"]
     got = {(row["point_id"], row["poly_id"]) for row in got_df.collect()}
     idx = np.argwhere(want)

@@ -234,6 +234,15 @@ def test_stream_static_pip_attribution(spark, tmp_path):
     want = sj.with_cell(pts, 6).join(idx, "cell_id")
     assert got.count() == want.count()
 
+    # the index carries its edge columns, so the exact filter runs on
+    # the stream and matches the batch PIP join
+    W.run_to_memory(sj.keep_inside(joined), "t_pip_stream_exact", str(tmp_path / "ckpt4x"))
+    key = ["point_id", "poly_id"]
+    exact = spark.table("t_pip_stream_exact").select(*key)
+    batch = sj.pip_attribute(pts, idx).select(*key)
+    assert exact.count() == batch.count() > 0
+    assert exact.exceptAll(batch).count() == 0
+
 
 def test_stream_static_salted_matches_unsalted(spark, tmp_path):
     """The salted stream–static join (hot-cell spreading with the batch
