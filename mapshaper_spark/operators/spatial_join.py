@@ -3,22 +3,29 @@
 Engine strategy (the two-phase cell join [SURVEY.md §2.3, BASELINE.json
 north_rule]):
 
-1. Build a ``cell_index`` relation (cell_id, poly_id, coverage) by
-   covering every polygon's bbox with grid cells and classifying each as
-   FULL (cell entirely inside the polygon — exact for convex polygons:
-   all four corners inside) or PARTIAL (bbox overlap only). The builder
-   also appends each row's polygon edges as half-plane columns
-   (``with_edges``, once per index), so the index is self-contained.
+1. Build a ``cell_index`` relation (cell_id, poly_id, coverage) on the
+   driver: the polygon layer is dim-sized, so it is collected and every
+   polygon is covered in numpy, with no Python worker. The convex
+   cover (:func:`_cover`) walks levels ``min_res`` … ``res`` from the
+   polygon's bbox grid: a cell is FULL at the coarsest level where it
+   lies entirely inside the polygon (all four corners inside — exact
+   for convex rings), dropped once an edge separates it from the
+   polygon, and split otherwise; what is left at ``res`` is PARTIAL.
+   ``min_res == res`` (the default) is the flat one-level cover; a lower
+   ``min_res`` is the S2-style hierarchical cover, whose size scales
+   with perimeter, not area. Each row also carries its polygon's edges
+   as half-plane columns, so the index is self-contained.
 
-2. Points get a ``cell_id`` column (pure column math, no UDF), then an
-   equi-join against the index, then one codegen'd JVM filter
-   (``keep_inside``) over the edge columns the index rows carry: FULL
-   matches pass untested, PARTIAL matches must satisfy every half-plane
-   — the same IEEE expression as ``geometry.pip_convex`` and the DuckDB
-   oracle. No row crosses into Python, and a join is the equi-join plus
-   that filter. On a real cluster the index is dim-sized →
-   ``F.broadcast`` → the whole attribution is a map-side join with zero
-   shuffle of the fact table.
+2. Points get a ``cell_id`` column (pure column math, no UDF; one row
+   per level when the index spans several), then an equi-join against
+   the index, then one codegen'd JVM filter (``keep_inside``) over the
+   edge columns the index rows carry: FULL matches pass untested,
+   PARTIAL matches must satisfy every half-plane — the same IEEE
+   expression as ``geometry.pip_convex`` and the DuckDB oracle. No row
+   crosses into Python, and a join is the equi-join plus that filter.
+   On a real cluster the index is dim-sized → ``F.broadcast`` → the
+   whole attribution is a map-side join with zero shuffle of the fact
+   table.
 
 Upstream analog: mapshaper's point-polygon join walks a bbox path index
 then runs a ray-crossing test per candidate [SURVEY.md §2.3]; the cell
@@ -48,103 +55,171 @@ def with_cell(df: DataFrame, res: int = DEFAULT_RES, lon: str = "lon", lat: str 
     return df.withColumn("cell_id", F.expr(cells.cell_sql(lon, lat, res)))
 
 
-def build_cell_index(spark: SparkSession, polygons: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
-    """cell_id → (poly_id, coverage, edge columns) cover relation, built
-    distributively (one applyInPandas group per polygon — each polygon
-    enumerates its own covering cells with numpy, so a million-polygon
-    layer parallelizes); :func:`with_edges` appends the edges."""
-    n = 1 << res
-
-    def cover(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for _, row in pdf.iterrows():
-            xs = np.asarray(row["xs"])
-            ys = np.asarray(row["ys"])
-            ring = np.column_stack([xs, ys])
-            ix0, iy0 = cells.grid_xy_np(np.array([xs.min()]), np.array([ys.min()]), res)
-            ix1, iy1 = cells.grid_xy_np(np.array([xs.max()]), np.array([ys.max()]), res)
-            gx = np.arange(ix0[0], ix1[0] + 1)
-            gy = np.arange(iy0[0], iy1[0] + 1)
-            mx, my = np.meshgrid(gx, gy)
-            mx, my = mx.ravel(), my.ravel()
-            # cell corner coords
-            cw, ch = 360.0 / n, 180.0 / n
-            x_lo, y_lo = -180.0 + mx * cw, -90.0 + my * ch
-            x_hi, y_hi = x_lo + cw, y_lo + ch
-            # FULL iff all 4 corners inside (exact for convex rings)
-            full = (
-                geometry.pip_convex(x_lo, y_lo, ring)
-                & geometry.pip_convex(x_hi, y_lo, ring)
-                & geometry.pip_convex(x_lo, y_hi, ring)
-                & geometry.pip_convex(x_hi, y_hi, ring)
-            )
-            cid = cells.cell_id_from_xy_np(mx, my, res)
-            out.append(
-                pd.DataFrame(
-                    {
-                        "cell_id": cid,
-                        "poly_id": row["poly_id"],
-                        "coverage": np.where(full, FULL, PARTIAL),
-                    }
-                )
-            )
-        return pd.concat(out) if out else pd.DataFrame(
-            {"cell_id": pd.Series(dtype="int64"), "poly_id": pd.Series(dtype="int32"),
-             "coverage": pd.Series(dtype="object")}
+def _levels(res: int, min_res: int | None) -> range:
+    """Cover levels ``min_res`` … ``res`` (``min_res`` defaults to
+    ``res``), checked on the driver before any Spark job."""
+    lo = res if min_res is None else min_res
+    if not 0 <= lo <= res <= cells.MAX_RES:
+        raise ValueError(
+            f"need 0 <= min_res <= res <= {cells.MAX_RES}, got min_res={min_res}, res={res}"
         )
+    return range(lo, res + 1)
 
-    cover_rows = polygons.groupBy("poly_id").applyInPandas(
-        cover, schema="cell_id long, poly_id int, coverage string"
-    )
-    return with_edges(cover_rows, polygons)
+
+def _bbox_cells(xs: np.ndarray, ys: np.ndarray, res: int) -> tuple[np.ndarray, np.ndarray]:
+    """Grid coords (ix, iy) of every res-``res`` cell the bbox of the
+    vertices ``xs, ys`` touches."""
+    ix, iy = cells.grid_xy_np(np.array([xs.min(), xs.max()]), np.array([ys.min(), ys.max()]), res)
+    mx, my = np.meshgrid(np.arange(ix[0], ix[1] + 1), np.arange(iy[0], iy[1] + 1))
+    return mx.ravel(), my.ravel()
+
+
+def _cell_bounds(ix: np.ndarray, iy: np.ndarray, res: int):
+    """x_lo, y_lo, x_hi, y_hi of the res-``res`` grid cells (ix, iy)."""
+    cw, ch = 360.0 / (1 << res), 180.0 / (1 << res)
+    x_lo, y_lo = -180.0 + ix * cw, -90.0 + iy * ch
+    return x_lo, y_lo, x_lo + cw, y_lo + ch
+
+
+def _cover(ring: np.ndarray, min_res: int, res: int) -> tuple[np.ndarray, np.ndarray]:
+    """Cover of one convex CCW ring over levels ``min_res`` … ``res``:
+    (cell_id, is_full). Starting from the ring's bbox grid at
+    ``min_res``, each level classifies all its cells at once:
+
+    - FULL if all four corners pass every half-plane test (the
+      ``geometry.pip_convex`` expression; convexity puts the whole cell
+      inside), emitted at this, the coarsest possible level;
+    - dropped if the cell misses the ring's bbox or some edge has all
+      four corners strictly outside (a separating half-plane);
+    - else split into its four children, or emitted PARTIAL at ``res``.
+
+    The cells are disjoint, so a point meets at most one of them.
+    """
+    x1, y1 = ring[:, 0], ring[:, 1]
+    dx, dy = (np.roll(x1, -1) - x1)[:, None, None], (np.roll(y1, -1) - y1)[:, None, None]
+    ix, iy = _bbox_cells(x1, y1, min_res)
+    cid, is_full = [], []
+    for r in range(min_res, res + 1):
+        x_lo, y_lo, x_hi, y_hi = _cell_bounds(ix, iy, r)
+        cx = np.stack([x_lo, x_hi, x_lo, x_hi], axis=1)
+        cy = np.stack([y_lo, y_lo, y_hi, y_hi], axis=1)
+        # (edge, cell, corner) cross products
+        cross = dx * (cy - y1[:, None, None]) - dy * (cx - x1[:, None, None])
+        full = (cross >= 0.0).all(axis=(0, 2))
+        split = (
+            ~full
+            & ~(cross < 0.0).all(axis=2).any(axis=0)
+            & (x_lo <= x1.max()) & (x_hi >= x1.min())
+            & (y_lo <= y1.max()) & (y_hi >= y1.min())
+        )
+        keep = full | split if r == res else full
+        cid.append(cells.cell_id_from_xy_np(ix[keep], iy[keep], r))
+        is_full.append(full[keep])
+        ix = ((2 * ix[split])[:, None] + [0, 1, 0, 1]).ravel()
+        iy = ((2 * iy[split])[:, None] + [0, 0, 1, 1]).ravel()
+    return np.concatenate(cid), np.concatenate(is_full)
 
 
 def _edge_columns(k: int) -> list[str]:
     return [f"{name}{j}" for j in range(k) for name in ("_hdx", "_hdy", "_hx", "_hy")]
 
 
-def with_edges(cover: DataFrame, polygons: DataFrame) -> DataFrame:
-    """``cover`` with its polygons' edges appended: every row (keyed by
-    ``poly_id``) gains the K edges of its ring in the one-ring-per-row
-    layer ``polygons`` as half-plane columns ``_hdx{j}, _hdy{j}, _hx{j},
-    _hy{j}``. The index builders call this once, so every join reads
-    the edges off the index.
-
-    The layer is dim-sized and collected on the driver. K is its largest
-    vertex count. ``dx``/``dy`` are computed here in numpy, exactly as
+def _half_planes(rings: list[np.ndarray]) -> np.ndarray:
+    """(len(rings), 4K) half-plane operands: row i holds ring i's edges
+    as ``dx, dy, x1, y1`` (the order of :func:`_edge_columns`), K the
+    largest vertex count. ``dx``/``dy`` are computed exactly as
     ``geometry.pip_convex`` computes them, so :func:`keep_inside` sees
     bit-identical operands. A ring with fewer than K edges repeats its
     edge 0: A AND A = A, exact for every input including NaN and ±inf
-    (a zero-padded edge would evaluate ``0 * inf``).
-    """
-    rows = polygons.select("poly_id", "xs", "ys").collect()
-    rings = {r["poly_id"]: np.column_stack([r["xs"], r["ys"]]) for r in rows}
-    if len(rings) != len(rows):
-        raise ValueError("a convex cell index needs one ring per poly_id")
-    k = max((len(r) for r in rings.values()), default=1)
+    (a zero-padded edge would evaluate ``0 * inf``)."""
+    k = max((len(r) for r in rings), default=1)
     planes = np.empty((len(rings), 4 * k))
-    for i, ring in enumerate(rings.values()):
+    for i, ring in enumerate(rings):
         x1, y1 = ring[:, 0], ring[:, 1]
         x2, y2 = np.roll(x1, -1), np.roll(y1, -1)
         pad = np.r_[np.arange(len(ring)), np.zeros(k - len(ring), dtype=int)]
         planes[i] = np.column_stack([x2 - x1, y2 - y1, x1, y1])[pad].ravel()
-    # a pyarrow table becomes a LocalRelation (no Python worker) and,
-    # unlike a pandas frame, keeps NaN distinct from null
-    cols = {"poly_id": pa.array(np.fromiter(rings, dtype=np.int32, count=len(rings)))}
-    cols.update((c, pa.array(planes[:, j])) for j, c in enumerate(_edge_columns(k)))
-    edges = cover.sparkSession.createDataFrame(pa.table(cols))
-    return cover.join(F.broadcast(edges), "poly_id").select(*cover.columns, *_edge_columns(k))
+    return planes
+
+
+def _local_frame(
+    spark: SparkSession, cols: dict[str, np.ndarray], planes: np.ndarray | None = None
+) -> DataFrame:
+    """Spark frame of the numpy columns ``cols``, plus, when given, the
+    rows of ``planes`` (:func:`_half_planes`) as the edge columns. It is
+    built through one pyarrow table, which becomes a LocalRelation (no
+    Python worker) and, unlike a pandas frame, keeps NaN distinct from
+    null."""
+    table = {c: pa.array(v) for c, v in cols.items()}
+    if planes is not None:
+        k = planes.shape[1] // 4
+        table.update((c, pa.array(planes[:, j])) for j, c in enumerate(_edge_columns(k)))
+    return spark.createDataFrame(pa.table(table))
+
+
+def _index_frame(
+    spark: SparkSession,
+    poly_ids: list[int],
+    covers: list[tuple[np.ndarray, np.ndarray]],
+    planes: np.ndarray | None = None,
+) -> DataFrame:
+    """``cell_id long, poly_id int, coverage string`` from one
+    ``(cell_id, is_full)`` cover per polygon in ``poly_ids``; with
+    ``planes``, each row also carries its polygon's half-planes."""
+    owner = np.repeat(np.arange(len(covers)), [len(c) for c, _ in covers])
+    full = np.concatenate([np.zeros(0, dtype=bool), *(f for _, f in covers)])
+    cols = {
+        "cell_id": np.concatenate([np.zeros(0, dtype=np.int64), *(c for c, _ in covers)]),
+        "poly_id": np.asarray(poly_ids, dtype=np.int32)[owner],
+        "coverage": np.where(full, FULL, PARTIAL),
+    }
+    return _local_frame(spark, cols, None if planes is None else planes[owner])
+
+
+def build_cell_index(
+    spark: SparkSession,
+    polygons: DataFrame,
+    res: int = DEFAULT_RES,
+    min_res: int | None = None,
+) -> DataFrame:
+    """Convex cell index of the one-ring-per-row layer ``polygons``
+    (poly_id, xs, ys; convex CCW rings): one row per :func:`_cover` cell
+    over levels ``min_res`` … ``res``, ``cell_id, poly_id, coverage``
+    plus the polygon's edges as half-plane columns ``_hdx{j}, _hdy{j},
+    _hx{j}, _hy{j}``, so every join reads them off the index.
+
+    ``min_res`` defaults to ``res``, the flat one-level cover. A lower
+    ``min_res`` emits FULL cells at the coarsest interior level (the
+    S2-style cover: index size scales with perimeter, not area); join
+    it with :func:`pip_attribute` at the same ``min_res``.
+
+    The layer is dim-sized, so it is collected and covered on the driver
+    in numpy; no Python worker starts. Raises ``ValueError`` on the
+    driver for bad levels, a repeated poly_id, or a ring that is
+    clockwise or has no area (it would silently match nothing).
+    """
+    levels = _levels(res, min_res)
+    rows = polygons.select("poly_id", "xs", "ys").collect()
+    poly_ids = [r["poly_id"] for r in rows]
+    if len(set(poly_ids)) != len(rows):
+        raise ValueError("a convex cell index needs one ring per poly_id")
+    rings = [np.column_stack([r["xs"], r["ys"]]).astype(float) for r in rows]
+    for pid, ring in zip(poly_ids, rings):
+        if len(ring) < 3 or not geometry.shoelace_area_local(ring[:, 0], ring[:, 1]) > 0.0:
+            raise ValueError(f"poly_id {pid}: convex ring must be counter-clockwise with positive area")
+    covers = [_cover(ring, levels.start, res) for ring in rings]
+    return _index_frame(spark, poly_ids, covers, _half_planes(rings))
 
 
 def keep_inside(cand: DataFrame) -> DataFrame:
     """Exact convex PIP over candidate rows carrying ``lon``, ``lat``,
-    ``coverage`` and the index's edge columns (:func:`with_edges`; K is
-    read off the ``_hdx*`` columns): FULL rows pass untested, PARTIAL
-    rows pass iff every half-plane holds. Every index row comes from the
-    polygon whose ring produced its edges, so there is no missing-ring
-    case at run time; an index with no edge columns at all (not built by
-    ``build_cell_index`` or ``build_cell_index_hier``) raises here, on
-    the driver. Drops ``coverage`` and the edge columns.
+    ``coverage`` and the index's edge columns (:func:`build_cell_index`;
+    K is read off the ``_hdx*`` columns): FULL rows pass untested,
+    PARTIAL rows pass iff every half-plane holds. Every index row comes
+    from the polygon whose ring produced its edges, so there is no
+    missing-ring case at run time; an index with no edge columns at all
+    (not built by ``build_cell_index``) raises here, on the driver.
+    Drops ``coverage`` and the edge columns.
 
     The test is one codegen'd JVM predicate with the IEEE expression of
     ``geometry.pip_convex`` and the DuckDB oracle (Java never fuses it
@@ -165,7 +240,7 @@ def keep_inside(cand: DataFrame) -> DataFrame:
     k = sum(c.startswith("_hdx") for c in cand.columns)
     if not k:
         raise ValueError(
-            "cell index has no edge columns: build it with build_cell_index(_hier)"
+            "cell index has no edge columns: build it with build_cell_index"
         )
     planes = [
         f"nanvl(_hdx{j} * (lat - _hy{j}) - _hdy{j} * (lon - _hx{j}), -1.0D) >= 0.0D"
@@ -175,14 +250,28 @@ def keep_inside(cand: DataFrame) -> DataFrame:
     return cand.filter(keep).drop("coverage", *_edge_columns(k))
 
 
-def pip_attribute(points: DataFrame, cell_index: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
+def pip_attribute(
+    points: DataFrame,
+    cell_index: DataFrame,
+    res: int = DEFAULT_RES,
+    min_res: int | None = None,
+) -> DataFrame:
     """Attach poly_id to every point inside a polygon (inner join shape).
 
-    Returns points x matched polygons (a point in two overlapping
-    polygons yields two rows — same semantics as the all-pairs oracle).
+    ``res`` and ``min_res`` are the levels ``cell_index`` was built
+    with. Over one level a point gets one ``cell_id``; over several it
+    explodes to its cell id at every level (pure column math, one row
+    per level) and meets at most one cover cell per polygon. Returns
+    points x matched polygons (a point in two overlapping polygons
+    yields two rows — same semantics as the all-pairs oracle).
     """
-    cand = with_cell(points, res).join(F.broadcast(cell_index), "cell_id")
-    return keep_inside(cand)
+    levels = _levels(res, min_res)
+    if len(levels) == 1:
+        pts = with_cell(points, res)
+    else:
+        level_cells = F.array(*[F.expr(cells.cell_sql("lon", "lat", r)) for r in levels])
+        pts = points.withColumn("cell_id", F.explode(level_cells))
+    return keep_inside(pts.join(F.broadcast(cell_index), "cell_id"))
 
 
 def _as_ring_list(rings) -> list[np.ndarray]:
@@ -197,9 +286,10 @@ def build_cell_index_general(
 ) -> DataFrame:
     """Cell cover for ARBITRARY features: non-convex, multi-ring, holes.
 
-    Input rows are one ring each (poly_id[, ring_idx], xs, ys); groupBy
-    reassembles the feature. Winding-aware classification per bbox cell
-    [NEXT.md #2 realized]:
+    Input rows are one ring each (poly_id[, ring_idx], xs, ys); the
+    dim-sized layer is collected and each feature reassembled and
+    covered on the driver, like :func:`build_cell_index`. Winding-aware
+    classification per bbox cell [NEXT.md #2 realized]:
 
     - a ring edge crosses the cell rectangle (vectorized Liang-Barsky)
       → PARTIAL (exact kernel at probe time);
@@ -209,47 +299,20 @@ def build_cell_index_general(
       the feature — dropping outside cells shrinks the index AND removes
       false candidates the convex-era cover kept as PARTIAL).
     """
-
-    def cover(pdf: pd.DataFrame) -> pd.DataFrame:
-        rings = [
-            np.column_stack([np.asarray(r["xs"]), np.asarray(r["ys"])])
-            for _, r in pdf.iterrows()
-        ]
-        edges = np.concatenate(
-            [
-                np.column_stack([ring, np.roll(ring, -1, axis=0)])
-                for ring in rings
-            ]
-        )
-        allx = np.concatenate([r[:, 0] for r in rings])
-        ally = np.concatenate([r[:, 1] for r in rings])
-        n = 1 << res
-        ix0, iy0 = cells.grid_xy_np(np.array([allx.min()]), np.array([ally.min()]), res)
-        ix1, iy1 = cells.grid_xy_np(np.array([allx.max()]), np.array([ally.max()]), res)
-        gx = np.arange(ix0[0], ix1[0] + 1)
-        gy = np.arange(iy0[0], iy1[0] + 1)
-        mx, my = np.meshgrid(gx, gy)
-        mx, my = mx.ravel(), my.ravel()
-        cw, ch = 360.0 / n, 180.0 / n
-        x_lo, y_lo = -180.0 + mx * cw, -90.0 + my * ch
-        x_hi, y_hi = x_lo + cw, y_lo + ch
+    _levels(res, None)
+    feats: dict[int, list[np.ndarray]] = {}
+    for r in polygons.select("poly_id", "xs", "ys").collect():
+        feats.setdefault(r["poly_id"], []).append(np.column_stack([r["xs"], r["ys"]]))
+    covers = []
+    for rings in feats.values():
+        edges = np.concatenate([np.column_stack([ring, np.roll(ring, -1, axis=0)]) for ring in rings])
+        ix, iy = _bbox_cells(edges[:, 0], edges[:, 1], res)
+        x_lo, y_lo, x_hi, y_hi = _cell_bounds(ix, iy, res)
         boundary = geometry.edges_intersect_rects(edges, x_lo, y_lo, x_hi, y_hi)
-        center_in = geometry.pip_rings(
-            (x_lo + x_hi) / 2.0, (y_lo + y_hi) / 2.0, rings
-        )
+        center_in = geometry.pip_rings((x_lo + x_hi) / 2.0, (y_lo + y_hi) / 2.0, rings)
         keep = boundary | center_in
-        cid = cells.cell_id_from_xy_np(mx[keep], my[keep], res)
-        return pd.DataFrame(
-            {
-                "cell_id": cid,
-                "poly_id": int(pdf["poly_id"].iloc[0]),
-                "coverage": np.where(boundary[keep], PARTIAL, FULL),
-            }
-        )
-
-    return polygons.groupBy("poly_id").applyInPandas(
-        cover, schema="cell_id long, poly_id int, coverage string"
-    )
+        covers.append((cells.cell_id_from_xy_np(ix[keep], iy[keep], res), ~boundary[keep]))
+    return _index_frame(spark, list(feats), covers)
 
 
 def _pip_rings_udf(rings_by_poly: dict[int, list[np.ndarray]]):

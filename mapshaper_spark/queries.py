@@ -39,7 +39,6 @@ from .operators import ann as ann_op
 from .operators import images as images_op
 from .functions import proj as proj_fn
 from .operators import asof as asof_op
-from .operators import hier_cover as hier_op
 from .operators import knn as knn_op
 from .operators import overlay as overlay_op
 from .operators import points as points_op
@@ -291,8 +290,8 @@ def q_pip_count_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary cells → index size scales with polygon PERIMETER, not area
     (the 100 TB / fine-resolution path) [NEXT.md #1]."""
     pts = testdata.customer_points(spark, sf_dir)
-    idx = hier_op.build_cell_index_hier(spark, testdata.polygons(spark))
-    hits = hier_op.pip_attribute_hier(pts, idx)
+    idx = sj.build_cell_index(spark, testdata.polygons(spark), min_res=3)
+    hits = sj.pip_attribute(pts, idx, min_res=3)
     return hits.groupBy("poly_id").agg(F.count(F.lit(1)).alias("n_points"))
 
 

@@ -10,8 +10,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from mapshaper_spark import fixtures, geometry
-from mapshaper_spark.operators import hier_cover as hier_op
+from mapshaper_spark import cells, fixtures, geometry
 from mapshaper_spark.operators import skew as skew_op
 from mapshaper_spark.operators import spatial_join as sj
 from mapshaper_spark.sources import testdata
@@ -19,9 +18,7 @@ from mapshaper_spark.sources import testdata
 _CALLERS = {
     "broadcast": lambda pts, idx: sj.pip_attribute(pts, idx),
     "salted": lambda pts, idx: skew_op.pip_attribute_salted(pts, idx, target_rows_per_task=1),
-    "hier": lambda pts, idx: hier_op.pip_attribute_hier(
-        pts, idx, min_res=sj.DEFAULT_RES, max_res=sj.DEFAULT_RES
-    ),
+    "hier": lambda pts, idx: sj.pip_attribute(pts, idx, min_res=3),
 }
 
 # the fixture rings moved by an offset that is no multiple of the res-6
@@ -71,14 +68,14 @@ def test_callers_match_pip_convex_on_own_layer(spark):
     polys = _layer_df(spark)
     pts, pdf, want = _layer_points(spark)
     flat = sj.build_cell_index(spark, polys)
-    hier = hier_op.build_cell_index_hier(spark, polys)
+    hier = sj.build_cell_index(spark, polys, min_res=3)
 
     def pairs(df):
         return {(r["point_id"], r["poly_id"]) for r in df.collect()}
 
     assert pairs(sj.pip_attribute(pts, flat)) == want
     assert pairs(skew_op.pip_attribute_salted(pts, flat, target_rows_per_task=20)) == want
-    assert pairs(hier_op.pip_attribute_hier(pts, hier)) == want
+    assert pairs(sj.pip_attribute(pts, hier, min_res=3)) == want
 
     inside = {i for i, _ in want}
     assert {r["point_id"] for r in sj.clip_points(pts, flat).collect()} == inside
@@ -123,11 +120,36 @@ def test_duplicate_poly_id_raises(spark):
         sj.build_cell_index(spark, polys)
 
 
+@pytest.mark.parametrize("ring", [lambda r: r[::-1], lambda r: r[:2] * 2], ids=["cw", "flat"])
+def test_cw_or_degenerate_ring_raises(spark, ring):
+    # a clockwise ring (mapshaper's outer-ring order) or one with no
+    # area fails every half-plane test: reject it instead of matching
+    # nothing
+    layer = [dict(p, ring=ring(p["ring"])) if p["poly_id"] == 5 else p for p in _LAYER]
+    polys = spark.createDataFrame(
+        fixtures.polygons_pdf(layer),
+        schema="poly_id int, name string, xs array<double>, ys array<double>",
+    )
+    with pytest.raises(ValueError, match="poly_id 5"):
+        sj.build_cell_index(spark, polys)
+
+
+@pytest.mark.parametrize("res, min_res", [(6, 7), (6, -1), (cells.MAX_RES + 1, 6), (-1, None)])
+def test_bad_levels_raise_before_any_job(res, min_res):
+    # rejected on the driver: no Spark call is reached (the frames are
+    # never touched)
+    with pytest.raises(ValueError, match="min_res <= res"):
+        sj.build_cell_index(None, None, res=res, min_res=min_res)
+    with pytest.raises(ValueError, match="min_res <= res"):
+        sj.pip_attribute(None, None, res=res, min_res=min_res)
+
+
 def test_empty_layer_matches_nothing(spark):
     polys = spark.createDataFrame([], "poly_id int, xs array<double>, ys array<double>")
     pts = spark.createDataFrame([(0, 1.0, 1.0)], "point_id long, lon double, lat double")
     assert sj.pip_attribute(pts, sj.build_cell_index(spark, polys)).count() == 0
-    assert hier_op.pip_attribute_hier(pts, hier_op.build_cell_index_hier(spark, polys)).count() == 0
+    hier = sj.build_cell_index(spark, polys, min_res=3)
+    assert sj.pip_attribute(pts, hier, min_res=3).count() == 0
 
 
 def test_short_rings_padded_with_edge_zero(spark):

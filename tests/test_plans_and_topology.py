@@ -9,7 +9,6 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from mapshaper_spark import fixtures, queries as Q
-from mapshaper_spark.operators import hier_cover as hier_op
 from mapshaper_spark.operators import skew as skew_op
 from mapshaper_spark.operators import spatial_join as sj
 from mapshaper_spark.operators import topology
@@ -59,10 +58,22 @@ def test_pip_over_checkpointed_index_is_one_broadcast_join(spark):
 
 def test_hier_pip_has_no_python_eval(spark):
     pts = testdata.customer_points(spark, SF_SMOKE)
-    idx = hier_op.build_cell_index_hier(spark, testdata.polygons(spark))
-    plan = _plan(hier_op.pip_attribute_hier(pts, idx))
+    idx = sj.build_cell_index(spark, testdata.polygons(spark), min_res=3)
+    plan = _plan(sj.pip_attribute(pts, idx, min_res=3))
     assert "BroadcastHashJoin" in plan
     _assert_no_python_eval(plan)
+
+
+def test_index_builders_plan_no_python_worker(spark):
+    """Convex and general cell indexes are built on the driver: their
+    plans hold no grouped-pandas or Arrow UDF node."""
+    for idx in (
+        sj.build_cell_index(spark, testdata.polygons(spark)),
+        sj.build_cell_index_general(spark, testdata.holed_features(spark)),
+    ):
+        plan = _plan(idx)
+        assert "FlatMapGroupsInPandas" not in plan
+        _assert_no_python_eval(plan)
 
 
 def test_salted_pip_shuffles_and_salts(spark):

@@ -1214,20 +1214,19 @@ def test_convex_pip_filter_matches_pip_convex(p):
         want = full | np.column_stack([G.pip_convex(px, py, rings[q]) for q in pids])
 
     spark = get_spark("mapshaper_spark_tests", cpus=8, shuffle_partitions=8)
-    cand = spark.createDataFrame(
-        [
-            (i, int(q), float(px[i]), float(py[i]), sj.FULL if full[i, c] else sj.PARTIAL)
-            for i in range(len(px))
-            for c, q in enumerate(pids)
-        ],
-        "point_id int, poly_id int, lon double, lat double, coverage string",
+    # one candidate row per (point, polygon), edges gathered by polygon
+    pt, pi = np.divmod(np.arange(full.size), len(pids))
+    with_e = sj._local_frame(
+        spark,
+        {
+            "point_id": pt.astype(np.int32),
+            "poly_id": pids[pi].astype(np.int32),
+            "lon": px[pt],
+            "lat": py[pt],
+            "coverage": np.where(full.ravel(), sj.FULL, sj.PARTIAL),
+        },
+        sj._half_planes([rings[q] for q in pids])[pi],
     )
-    polys = spark.createDataFrame(
-        [(int(q), [float(x) for x in ring[:, 0]], [float(y) for y in ring[:, 1]])
-         for q, ring in rings.items()],
-        "poly_id int, xs array<double>, ys array<double>",
-    )
-    with_e = sj.with_edges(cand, polys)
     assert sum(c.startswith("_hdx") for c in with_e.columns) == 64
     got_df = sj.keep_inside(with_e)
     assert got_df.columns == ["point_id", "poly_id", "lon", "lat"]
