@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .spatial_join import DEFAULT_RES, keep_inside, with_cell
+from .spatial_join import _point_cells, keep_inside
 
 
 def cell_salt_factors(
@@ -116,7 +116,6 @@ def salted_equi_join(
 def pip_attribute_salted(
     points: DataFrame,
     cell_index: DataFrame,
-    res: int = DEFAULT_RES,
     target_rows_per_task: int = 250_000,
     hot_threshold: int | None = None,
     sample_fraction: float | None = None,
@@ -127,14 +126,15 @@ def pip_attribute_salted(
 
     ``pip_attribute`` broadcasts the index (right when it fits); this
     path is for the regime where the index itself is shuffle-joined
-    (continent-scale polygon layers) and hot cells would straggle.
+    (continent-scale polygon layers) and hot cells would straggle. Point
+    cells come from the levels ``cell_index`` records, as there.
 
     ``stats_points``: optional cheaper source for the salt statistics
     (e.g. the raw column-pruned scan when ``points`` sits downstream of
     an expensive map stage — sampling cannot push through a UDF).
     """
-    pts = with_cell(points, res)
-    stats_src = with_cell(stats_points, res) if stats_points is not None else pts
+    pts = _point_cells(points, cell_index)
+    stats_src = _point_cells(stats_points, cell_index) if stats_points is not None else pts
     factors = cell_salt_factors(
         stats_src, target_rows_per_task, hot_threshold, sample_fraction=sample_fraction
     )

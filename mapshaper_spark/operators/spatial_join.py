@@ -14,15 +14,17 @@ north_rule]):
    ``min_res == res`` (the default) is the flat one-level cover; a lower
    ``min_res`` is the S2-style hierarchical cover, whose size scales
    with perimeter, not area. Each row also carries its polygon's edges
-   as half-plane columns, so the index is self-contained.
+   as half-plane columns, and the ``cell_id`` column's metadata records
+   the levels and the kind of cover, so the index is self-contained.
 
-2. Points get a ``cell_id`` column (pure column math, no UDF; one row
-   per level when the index spans several), then an equi-join against
-   the index, then one codegen'd JVM filter (``keep_inside``) over the
-   edge columns the index rows carry: FULL matches pass untested,
-   PARTIAL matches must satisfy every half-plane — the same IEEE
-   expression as ``geometry.pip_convex`` and the DuckDB oracle. No row
-   crosses into Python, and a join is the equi-join plus that filter.
+2. Points get a ``cell_id`` column at the levels the index records
+   (pure column math, no UDF; one row per level when the index spans
+   several), then an equi-join against the index, then one codegen'd
+   JVM filter (``keep_inside``) over the edge columns the index rows
+   carry: FULL matches pass untested, PARTIAL matches must satisfy
+   every half-plane — the same IEEE expression as
+   ``geometry.pip_convex`` and the DuckDB oracle. No row crosses into
+   Python, and a join is the equi-join plus that filter.
    On a real cluster the index is dim-sized → ``F.broadcast`` → the
    whole attribution is a map-side join with zero shuffle of the fact
    table.
@@ -161,11 +163,16 @@ def _index_frame(
     spark: SparkSession,
     poly_ids: list[int],
     covers: list[tuple[np.ndarray, np.ndarray]],
+    levels: range,
+    kind: str,
     planes: np.ndarray | None = None,
 ) -> DataFrame:
     """``cell_id long, poly_id int, coverage string`` from one
     ``(cell_id, is_full)`` cover per polygon in ``poly_ids``; with
-    ``planes``, each row also carries its polygon's half-planes."""
+    ``planes``, each row also carries its polygon's half-planes. The
+    ``cell_id`` metadata ``{"min_res", "res", "kind"}`` records the
+    cover; it rides the schema through ``localCheckpoint``, ``select``,
+    hints and ``F.broadcast``, so joins read it (:func:`_point_cells`)."""
     owner = np.repeat(np.arange(len(covers)), [len(c) for c, _ in covers])
     full = np.concatenate([np.zeros(0, dtype=bool), *(f for _, f in covers)])
     cols = {
@@ -173,7 +180,27 @@ def _index_frame(
         "poly_id": np.asarray(poly_ids, dtype=np.int32)[owner],
         "coverage": np.where(full, FULL, PARTIAL),
     }
-    return _local_frame(spark, cols, None if planes is None else planes[owner])
+    frame = _local_frame(spark, cols, None if planes is None else planes[owner])
+    return frame.withMetadata("cell_id", {"min_res": levels.start, "res": levels.stop - 1, "kind": kind})
+
+
+def _point_cells(points: DataFrame, cell_index: DataFrame, kind: str = "convex") -> DataFrame:
+    """``points`` with a ``cell_id`` column at the levels ``cell_index``
+    covers, read off its ``cell_id`` metadata on the driver (the schema
+    is cached per frame, so no job runs): :func:`with_cell` for one
+    level; over several, each point explodes to its cell id at every
+    level (pure column math, one row per level) and meets at most one
+    cover cell per polygon. Raises ``ValueError`` before any job for an
+    index that records no levels or another ``kind`` of cover."""
+    meta = next((f.metadata for f in cell_index.schema if f.name == "cell_id"), {})
+    if meta.get("kind") != kind:
+        build = "build_cell_index" if kind == "convex" else "build_cell_index_general"
+        raise ValueError(f"cell_index records no {kind} cover levels: build it with {build}")
+    lo, hi = meta["min_res"], meta["res"]
+    if lo == hi:
+        return with_cell(points, hi)
+    level_cells = F.array(*[F.expr(cells.cell_sql("lon", "lat", r)) for r in range(lo, hi + 1)])
+    return points.withColumn("cell_id", F.explode(level_cells))
 
 
 def build_cell_index(
@@ -190,8 +217,9 @@ def build_cell_index(
 
     ``min_res`` defaults to ``res``, the flat one-level cover. A lower
     ``min_res`` emits FULL cells at the coarsest interior level (the
-    S2-style cover: index size scales with perimeter, not area); join
-    it with :func:`pip_attribute` at the same ``min_res``.
+    S2-style cover: index size scales with perimeter, not area). The
+    levels are recorded on the index (:func:`_index_frame`), so every
+    join over it assigns point cells at exactly these levels.
 
     The layer is dim-sized, so it is collected and covered on the driver
     in numpy; no Python worker starts. Raises ``ValueError`` on the
@@ -208,7 +236,7 @@ def build_cell_index(
         if len(ring) < 3 or not geometry.shoelace_area_local(ring[:, 0], ring[:, 1]) > 0.0:
             raise ValueError(f"poly_id {pid}: convex ring must be counter-clockwise with positive area")
     covers = [_cover(ring, levels.start, res) for ring in rings]
-    return _index_frame(spark, poly_ids, covers, _half_planes(rings))
+    return _index_frame(spark, poly_ids, covers, levels, "convex", _half_planes(rings))
 
 
 def keep_inside(cand: DataFrame) -> DataFrame:
@@ -250,27 +278,15 @@ def keep_inside(cand: DataFrame) -> DataFrame:
     return cand.filter(keep).drop("coverage", *_edge_columns(k))
 
 
-def pip_attribute(
-    points: DataFrame,
-    cell_index: DataFrame,
-    res: int = DEFAULT_RES,
-    min_res: int | None = None,
-) -> DataFrame:
+def pip_attribute(points: DataFrame, cell_index: DataFrame) -> DataFrame:
     """Attach poly_id to every point inside a polygon (inner join shape).
 
-    ``res`` and ``min_res`` are the levels ``cell_index`` was built
-    with. Over one level a point gets one ``cell_id``; over several it
-    explodes to its cell id at every level (pure column math, one row
-    per level) and meets at most one cover cell per polygon. Returns
-    points x matched polygons (a point in two overlapping polygons
-    yields two rows — same semantics as the all-pairs oracle).
+    Point cells are assigned at the levels ``cell_index`` records
+    (:func:`_point_cells`), flat or hierarchical. Returns points x
+    matched polygons (a point in two overlapping polygons yields two
+    rows — same semantics as the all-pairs oracle).
     """
-    levels = _levels(res, min_res)
-    if len(levels) == 1:
-        pts = with_cell(points, res)
-    else:
-        level_cells = F.array(*[F.expr(cells.cell_sql("lon", "lat", r)) for r in levels])
-        pts = points.withColumn("cell_id", F.explode(level_cells))
+    pts = _point_cells(points, cell_index)
     return keep_inside(pts.join(F.broadcast(cell_index), "cell_id"))
 
 
@@ -298,8 +314,10 @@ def build_cell_index_general(
       the index entirely (a concave/holed feature's bbox is mostly not
       the feature — dropping outside cells shrinks the index AND removes
       false candidates the convex-era cover kept as PARTIAL).
+
+    Like :func:`build_cell_index`, the index records its level.
     """
-    _levels(res, None)
+    levels = _levels(res, None)
     feats: dict[int, list[np.ndarray]] = {}
     for r in polygons.select("poly_id", "xs", "ys").collect():
         feats.setdefault(r["poly_id"], []).append(np.column_stack([r["xs"], r["ys"]]))
@@ -312,7 +330,7 @@ def build_cell_index_general(
         center_in = geometry.pip_rings((x_lo + x_hi) / 2.0, (y_lo + y_hi) / 2.0, rings)
         keep = boundary | center_in
         covers.append((cells.cell_id_from_xy_np(ix[keep], iy[keep], res), ~boundary[keep]))
-    return _index_frame(spark, list(feats), covers)
+    return _index_frame(spark, list(feats), covers, levels, "general")
 
 
 def _pip_rings_udf(rings_by_poly: dict[int, list[np.ndarray]]):
@@ -349,13 +367,13 @@ def pip_attribute_general(
     points: DataFrame,
     cell_index: DataFrame,
     rings: dict[int, np.ndarray | list[np.ndarray]],
-    res: int = DEFAULT_RES,
 ) -> DataFrame:
-    """PIP attribution for general features: cell-candidate equi-join,
-    FULL cells skip geometry, PARTIAL cells run the even-odd multi-ring
-    kernel (holes included) in one masked pass."""
+    """PIP attribution for general features: cell-candidate equi-join
+    at the level ``cell_index`` (:func:`build_cell_index_general`)
+    records, FULL cells skip geometry, PARTIAL cells run the even-odd
+    multi-ring kernel (holes included) in one masked pass."""
     ring_lists = {p: _as_ring_list(r) for p, r in rings.items()}
-    pts = with_cell(points, res)
+    pts = _point_cells(points, cell_index, "general")
     cand = pts.join(F.broadcast(cell_index), "cell_id")
     inside = _pip_rings_udf(ring_lists)
     keep = inside(
@@ -364,13 +382,11 @@ def pip_attribute_general(
     return cand.filter(keep).drop("coverage")
 
 
-def clip_points(
-    points: DataFrame, cell_index: DataFrame, res: int = DEFAULT_RES, invert: bool = False
-) -> DataFrame:
+def clip_points(points: DataFrame, cell_index: DataFrame, invert: bool = False) -> DataFrame:
     """mapshaper ``-clip`` on a point layer: keep points inside the clip
     polygons (``-erase`` when invert=True) — a spatial semi/anti join.
     """
-    matched = pip_attribute(points, cell_index, res).select("point_id").distinct()
+    matched = pip_attribute(points, cell_index).select("point_id").distinct()
     how = "left_anti" if invert else "left_semi"
     return points.join(matched, "point_id", how)
 
@@ -379,30 +395,20 @@ def clip_points_general(
     points: DataFrame,
     cell_index: DataFrame,
     rings: dict[int, np.ndarray | list[np.ndarray]],
-    res: int = DEFAULT_RES,
     invert: bool = False,
 ) -> DataFrame:
     """-clip / -erase against a GENERAL clip layer (concave, multi-ring,
     holes): the hole-aware even-odd kernel decides containment."""
-    matched = (
-        pip_attribute_general(points, cell_index, rings, res)
-        .select("point_id")
-        .distinct()
-    )
+    matched = pip_attribute_general(points, cell_index, rings).select("point_id").distinct()
     how = "left_anti" if invert else "left_semi"
     return points.join(matched, "point_id", how)
 
 
-def polygon_point_agg(
-    points: DataFrame,
-    cell_index: DataFrame,
-    value_col: str,
-    res: int = DEFAULT_RES,
-) -> DataFrame:
+def polygon_point_agg(points: DataFrame, cell_index: DataFrame, value_col: str) -> DataFrame:
     """polygon→point join [-join with calc=]: aggregate contained points'
     attrs onto each polygon. Partial aggregation is map-side (Spark's
     hash-agg does the combine before the tiny 16-key shuffle)."""
-    hits = pip_attribute(points, cell_index, res)
+    hits = pip_attribute(points, cell_index)
     return hits.groupBy("poly_id").agg(
         F.count(F.lit(1)).alias("n_points"),
         F.round(
@@ -411,13 +417,7 @@ def polygon_point_agg(
     )
 
 
-def fuzzy_join(
-    points: DataFrame,
-    polygons: DataFrame,
-    cell_index: DataFrame,
-    radius: float,
-    res: int = DEFAULT_RES,
-) -> DataFrame:
+def fuzzy_join(points: DataFrame, polygons: DataFrame, radius: float) -> DataFrame:
     """``-fuzzy-join``: PIP join with a nearest-boundary radius fallback.
 
     [UPSTREAM ``src/commands/mapshaper-fuzzy-join.mjs`` — public
@@ -430,10 +430,10 @@ def fuzzy_join(
     Engine shape:
 
     1. containment rides the existing two-phase cell join
-       (``pip_attribute`` over ``cell_index``, which carries the edges
-       of the layer it was built from — FULL cells skip geometry); a
-       point in several polygons dedups to the smallest poly_id
-       (upstream keeps one match);
+       (``pip_attribute`` over a cell index built from ``polygons``
+       itself, so containment and the radius fallback read one layer —
+       FULL cells skip geometry); a point in several polygons dedups to
+       the smallest poly_id (upstream keeps one match);
     2. ONLY the misses (anti-join) enter the fallback: candidates =
        broadcast bbox+radius prefilter (a point within ``radius`` of a
        boundary is always inside the bbox expanded by ``radius``), then
@@ -456,7 +456,7 @@ def fuzzy_join(
 
     Returns (point_id, poly_id, fuzzy) — fuzzy=0 containment, 1 radius.
     """
-    hits = pip_attribute(points, cell_index, res)
+    hits = pip_attribute(points, build_cell_index(polygons.sparkSession, polygons))
     pip_best = (
         hits.groupBy("point_id")
         .agg(F.min("poly_id").alias("poly_id"))

@@ -108,24 +108,21 @@ def _with_cell(spark, df, o):
 @op("pip_attribute")
 def _pip(spark, df, o):
     idx = sj.build_cell_index(spark, testdata.polygons(spark), o.get("res", sj.DEFAULT_RES))
-    return sj.pip_attribute(df, idx, res=o.get("res", sj.DEFAULT_RES))
+    return sj.pip_attribute(df, idx)
 
 
 @op("pip_attribute_salted")
 def _pip_salted(spark, df, o):
     idx = sj.build_cell_index(spark, testdata.polygons(spark), o.get("res", sj.DEFAULT_RES))
     return skew_op.pip_attribute_salted(
-        df,
-        idx,
-        res=o.get("res", sj.DEFAULT_RES),
-        target_rows_per_task=o.get("target_rows_per_task", 250_000),
+        df, idx, target_rows_per_task=o.get("target_rows_per_task", 250_000)
     )
 
 
 @op("clip")
 def _clip(spark, df, o):
     idx = sj.build_cell_index(spark, testdata.polygons(spark), o.get("res", sj.DEFAULT_RES))
-    return sj.clip_points(df, idx, res=o.get("res", sj.DEFAULT_RES), invert=o.get("invert", False))
+    return sj.clip_points(df, idx, invert=o.get("invert", False))
 
 
 @op("knn_join")

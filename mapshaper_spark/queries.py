@@ -291,7 +291,7 @@ def q_pip_count_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the 100 TB / fine-resolution path) [NEXT.md #1]."""
     pts = testdata.customer_points(spark, sf_dir)
     idx = sj.build_cell_index(spark, testdata.polygons(spark), min_res=3)
-    hits = sj.pip_attribute(pts, idx, min_res=3)
+    hits = sj.pip_attribute(pts, idx)
     return hits.groupBy("poly_id").agg(F.count(F.lit(1)).alias("n_points"))
 
 
@@ -5038,9 +5038,7 @@ def q_fuzzy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     smallest poly_id; farther misses drop. The oracle brute-forces all
     point x edge pairs over the same literal layer."""
     pts = testdata.customer_points(spark, sf_dir)
-    polys = testdata.polygons(spark)
-    idx = sj.build_cell_index(spark, polys)
-    return sj.fuzzy_join(pts, polys, idx, radius=6.0)
+    return sj.fuzzy_join(pts, testdata.polygons(spark), radius=6.0)
 
 
 _DIVIDE_ORACLE = f"""

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import cells
+from ..operators.spatial_join import _point_cells
 
 # driver parquet carries timestamp[us] with no zone → Spark 4 reads NTZ
 EVENTS_SCHEMA = (
@@ -90,16 +90,15 @@ def dedup_within_watermark(events: DataFrame, watermark: str = "30 minutes") -> 
     return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(["event_id"])
 
 
-def stream_static_cell_join(
-    points_stream: DataFrame, cell_index: DataFrame, res: int = 6
-) -> DataFrame:
+def stream_static_cell_join(points_stream: DataFrame, cell_index: DataFrame) -> DataFrame:
     """Stream–static spatial join: live points against the static (and
-    broadcastable) cell index — live PIP candidate attribution. The join
-    keeps every index column, edge columns included, so
-    ``spatial_join.keep_inside`` refines the candidates on the stream
-    exactly as on a batch; projecting the index to (cell_id, poly_id,
-    coverage) would make that refinement impossible."""
-    pts = points_stream.withColumn("cell_id", F.expr(cells.cell_sql("lon", "lat", res)))
+    broadcastable) cell index, at the levels it records — live PIP
+    candidate attribution. The join keeps every index column, edge
+    columns included, so ``spatial_join.keep_inside`` refines the
+    candidates on the stream exactly as on a batch; projecting the
+    index to (cell_id, poly_id, coverage) would make that refinement
+    impossible."""
+    pts = _point_cells(points_stream, cell_index)
     return pts.join(F.broadcast(cell_index), "cell_id")
 
 
@@ -107,7 +106,6 @@ def stream_static_cell_join_salted(
     points_stream: DataFrame,
     cell_index: DataFrame,
     salt_factors: DataFrame,
-    res: int = 6,
     point_id: str = "point_id",
 ) -> DataFrame:
     """Stream–static spatial join with the SAME salt machinery as the
@@ -120,9 +118,7 @@ def stream_static_cell_join_salted(
     unsalted stream join."""
     from ..operators import skew as skew_op
 
-    pts = points_stream.withColumn(
-        "cell_id", F.expr(cells.cell_sql("lon", "lat", res))
-    )
+    pts = _point_cells(points_stream, cell_index)
     return skew_op.salted_equi_join(
         pts, cell_index, key="cell_id", salt_factors=salt_factors, fact_id=point_id
     )

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import importlib
+import inspect
 import pathlib
 import re
 
@@ -19,3 +21,24 @@ def test_no_cache_or_persist_in_package():
         if re.search(r"\.cache\(\)|\.persist\(", line)
     ]
     assert not bad, "\n".join(bad)
+
+
+def test_no_join_takes_levels_beside_an_index():
+    """A join reads its levels off the cell index it is handed (the
+    ``cell_id`` column's metadata); a ``res``/``min_res`` argument next
+    to ``cell_index`` could disagree with the index and silently miss
+    matches."""
+    bad, joins = [], 0
+    for name in (
+        "mapshaper_spark.operators.spatial_join",
+        "mapshaper_spark.operators.skew",
+        "mapshaper_spark.streaming.windows",
+    ):
+        for fname, fn in inspect.getmembers(importlib.import_module(name), inspect.isfunction):
+            params = inspect.signature(fn).parameters
+            if fname.startswith("_") or fn.__module__ != name or "cell_index" not in params:
+                continue
+            joins += 1
+            if {"res", "min_res"} & set(params):
+                bad.append(f"{name}.{fname}")
+    assert joins >= 8 and not bad, (joins, bad)

@@ -1,7 +1,8 @@
 """Convex PIP as a JVM half-plane filter over edge columns the cell
-index carries: every caller answers for the layer its index was built
-from (no fixture default), an index without edge columns fails loudly,
-and short rings are padded by repeating edge 0."""
+index carries: every caller answers for the layer and the levels its
+index was built with (no fixture default, no level arguments), an index
+without edge columns or level metadata fails loudly, and short rings
+are padded by repeating edge 0."""
 
 from __future__ import annotations
 
@@ -17,8 +18,7 @@ from mapshaper_spark.sources import testdata
 
 _CALLERS = {
     "broadcast": lambda pts, idx: sj.pip_attribute(pts, idx),
-    "salted": lambda pts, idx: skew_op.pip_attribute_salted(pts, idx, target_rows_per_task=1),
-    "hier": lambda pts, idx: sj.pip_attribute(pts, idx, min_res=3),
+    "salted": lambda pts, idx: skew_op.pip_attribute_salted(pts, idx, target_rows_per_task=20),
 }
 
 # the fixture rings moved by an offset that is no multiple of the res-6
@@ -62,52 +62,72 @@ def _layer_points(spark):
 
 
 def test_callers_match_pip_convex_on_own_layer(spark):
-    """Broadcast, salted, hier, clip/erase and polygon_point_agg over an
-    index of a non-fixture layer, with no rings argument, equal the
-    brute-force ``geometry.pip_convex`` answer."""
+    """Broadcast, salted, clip/erase and polygon_point_agg over a flat
+    and a hierarchical index of a non-fixture layer, with no rings and
+    no level arguments, equal the brute-force ``geometry.pip_convex``
+    answer: every caller reads the levels off the index."""
     polys = _layer_df(spark)
     pts, pdf, want = _layer_points(spark)
-    flat = sj.build_cell_index(spark, polys)
-    hier = sj.build_cell_index(spark, polys, min_res=3)
-
-    def pairs(df):
-        return {(r["point_id"], r["poly_id"]) for r in df.collect()}
-
-    assert pairs(sj.pip_attribute(pts, flat)) == want
-    assert pairs(skew_op.pip_attribute_salted(pts, flat, target_rows_per_task=20)) == want
-    assert pairs(sj.pip_attribute(pts, hier, min_res=3)) == want
-
     inside = {i for i, _ in want}
-    assert {r["point_id"] for r in sj.clip_points(pts, flat).collect()} == inside
-    erased = {r["point_id"] for r in sj.clip_points(pts, flat, invert=True).collect()}
-    assert erased == set(pdf["point_id"]) - inside
-
-    agg = {r["poly_id"]: (r["n_points"], r["sum_value"]) for r in
-           sj.polygon_point_agg(pts, flat, "v").collect()}
     v = pdf["v"].to_numpy()
     by_poly: dict[int, list[int]] = {}
     for i, pid in want:
         by_poly.setdefault(pid, []).append(i)
-    assert agg == {pid: (len(ix), float(v[ix].sum())) for pid, ix in by_poly.items()}
+
+    for min_res in (None, 3):
+        idx = sj.build_cell_index(spark, polys, min_res=min_res)
+        for name, caller in _CALLERS.items():
+            got = {(r["point_id"], r["poly_id"]) for r in caller(pts, idx).collect()}
+            assert got == want, (name, min_res)
+
+        assert {r["point_id"] for r in sj.clip_points(pts, idx).collect()} == inside
+        erased = {r["point_id"] for r in sj.clip_points(pts, idx, invert=True).collect()}
+        assert erased == set(pdf["point_id"]) - inside
+
+        agg = {r["poly_id"]: (r["n_points"], r["sum_value"]) for r in
+               sj.polygon_point_agg(pts, idx, "v").collect()}
+        assert agg == {pid: (len(ix), float(v[ix].sum())) for pid, ix in by_poly.items()}
 
 
-def _index(pts, poly_id: int, coverage: str):
-    return sj.with_cell(pts).select(
-        "cell_id",
-        F.lit(poly_id).cast("int").alias("poly_id"),
-        F.lit(coverage).alias("coverage"),
-    )
+def test_levels_ride_the_index_and_bare_frames_raise(spark):
+    # the levels live in the cell_id column's metadata and survive the
+    # transforms callers apply to a built index; a frame without them
+    # fails when the join is planned, before any job
+    idx = sj.build_cell_index(spark, _layer_df(spark), min_res=3)
+    levels = {"min_res": 3, "res": sj.DEFAULT_RES, "kind": "convex"}
+    for frame in (
+        idx,
+        idx.localCheckpoint(),
+        idx.select("cell_id", "poly_id", "coverage"),
+        idx.hint("shuffle_hash"),
+        F.broadcast(idx),
+    ):
+        assert frame.schema["cell_id"].metadata == levels
+    bare = spark.createDataFrame([(0, 0, sj.FULL)], "cell_id long, poly_id int, coverage string")
+    pts = spark.createDataFrame([(0, 1.0, 1.0)], "point_id long, lon double, lat double")
+    with pytest.raises(ValueError, match="build_cell_index"):
+        sj.pip_attribute(pts, bare)
 
 
-@pytest.mark.parametrize("caller", sorted(_CALLERS))
-def test_partial_row_without_ring_raises(spark, caller):
-    # an index that carries no edge columns (not built by a convex
-    # builder) fails on the driver instead of dropping PARTIAL rows
+def _index(spark, min_res: int | None):
+    # a real built index projected to its key columns: its levels
+    # survive, its edge columns do not
+    idx = sj.build_cell_index(spark, _layer_df(spark), min_res=min_res)
+    return idx.select("cell_id", "poly_id", "coverage")
+
+
+@pytest.mark.parametrize(
+    "caller, min_res", [("broadcast", None), ("salted", None), ("broadcast", 3)],
+    ids=["broadcast", "salted", "hier"],
+)
+def test_partial_row_without_ring_raises(spark, caller, min_res):
+    # an index that carries no edge columns fails on the driver instead
+    # of dropping PARTIAL rows
     pts = spark.createDataFrame(
         [(0, 1.0, 1.0), (1, 30.0, -20.0)], "point_id long, lon double, lat double"
     )
     with pytest.raises(ValueError, match="no edge columns"):
-        _CALLERS[caller](pts, _index(pts, 99, sj.PARTIAL))
+        _CALLERS[caller](pts, _index(spark, min_res))
 
 
 def test_duplicate_poly_id_raises(spark):
@@ -140,8 +160,6 @@ def test_bad_levels_raise_before_any_job(res, min_res):
     # never touched)
     with pytest.raises(ValueError, match="min_res <= res"):
         sj.build_cell_index(None, None, res=res, min_res=min_res)
-    with pytest.raises(ValueError, match="min_res <= res"):
-        sj.pip_attribute(None, None, res=res, min_res=min_res)
 
 
 def test_empty_layer_matches_nothing(spark):
@@ -149,7 +167,7 @@ def test_empty_layer_matches_nothing(spark):
     pts = spark.createDataFrame([(0, 1.0, 1.0)], "point_id long, lon double, lat double")
     assert sj.pip_attribute(pts, sj.build_cell_index(spark, polys)).count() == 0
     hier = sj.build_cell_index(spark, polys, min_res=3)
-    assert sj.pip_attribute(pts, hier, min_res=3).count() == 0
+    assert sj.pip_attribute(pts, hier).count() == 0
 
 
 def test_short_rings_padded_with_edge_zero(spark):

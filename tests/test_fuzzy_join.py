@@ -17,9 +17,8 @@ def _layer(spark):
     return polys
 
 
-def _fuzzy(spark, pts, polys, radius):
-    idx = sj.build_cell_index(spark, polys)
-    rows = sj.fuzzy_join(pts, polys, idx, radius=radius).collect()
+def _fuzzy(pts, polys, radius):
+    rows = sj.fuzzy_join(pts, polys, radius=radius).collect()
     return {(r["point_id"], r["poly_id"], r["fuzzy"]) for r in rows}
 
 
@@ -38,7 +37,7 @@ def test_fuzzy_join_kinds_and_drops(spark):
     hits = sj.pip_attribute(pts, idx)
     assert {(r["point_id"], r["poly_id"]) for r in hits.collect()} == {(0, 0)}
 
-    out = _fuzzy(spark, pts, polys, radius=2.0)
+    out = _fuzzy(pts, polys, radius=2.0)
     assert out == {(0, 0, 0), (1, 0, 1), (2, 1, 1)}
 
 
@@ -51,7 +50,7 @@ def test_fuzzy_join_uses_callers_layer(spark):
         [(0, 2.0, 2.0), (1, 5.5, 2.0), (2, 12.5, 2.0)],
         "point_id long, lon double, lat double",
     )
-    out = _fuzzy(spark, pts, polys, radius=2.0)
+    out = _fuzzy(pts, polys, radius=2.0)
     assert out == {(0, 0, 0), (1, 0, 1), (2, 1, 1)}
 
 
@@ -61,7 +60,7 @@ def test_fuzzy_join_tie_breaks_to_smaller_poly_id(spark):
     pts = spark.createDataFrame(
         [(0, 9.0, 2.0)], "point_id long, lon double, lat double"
     )
-    out = _fuzzy(spark, pts, polys, radius=6.0)
+    out = _fuzzy(pts, polys, radius=6.0)
     assert out == {(0, 0, 1)}
 
 
@@ -72,5 +71,5 @@ def test_fuzzy_radius_boundary_is_inclusive(spark):
         "point_id long, lon double, lat double",
     )
     # d to a's right edge: 2.0 (== radius, kept) and 2.5 (dropped)
-    out = _fuzzy(spark, pts, polys, radius=2.0)
+    out = _fuzzy(pts, polys, radius=2.0)
     assert out == {(0, 0, 1)}

@@ -99,7 +99,7 @@ def test_grouped_kernel_scales_past_closure_size(spark):
         for r in boxes.select("poly_id", "xs", "ys").collect()
     }
     assert len(rings) == n_side * n_side
-    got = sj.pip_attribute_general(pts, idx, rings, res=6)
+    got = sj.pip_attribute_general(pts, idx, rings)
 
     # analytic truth: box index from floor math (half-open boxes [lo, hi))
     want = pts.select(

@@ -79,7 +79,7 @@ def test_hier_join_matches_flat_join(spark):
     flat_idx = sj.build_cell_index(spark, polys, res=6)
     hier_idx = sj.build_cell_index(spark, polys, res=6, min_res=3)
     a = sj.pip_attribute(pts, flat_idx).select("point_id", "poly_id")
-    b = sj.pip_attribute(pts, hier_idx, res=6, min_res=3).select("point_id", "poly_id")
+    b = sj.pip_attribute(pts, hier_idx).select("point_id", "poly_id")
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 

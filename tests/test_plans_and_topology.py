@@ -59,7 +59,7 @@ def test_pip_over_checkpointed_index_is_one_broadcast_join(spark):
 def test_hier_pip_has_no_python_eval(spark):
     pts = testdata.customer_points(spark, SF_SMOKE)
     idx = sj.build_cell_index(spark, testdata.polygons(spark), min_res=3)
-    plan = _plan(sj.pip_attribute(pts, idx, min_res=3))
+    plan = _plan(sj.pip_attribute(pts, idx))
     assert "BroadcastHashJoin" in plan
     _assert_no_python_eval(plan)
 

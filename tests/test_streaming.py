@@ -243,6 +243,18 @@ def test_stream_static_pip_attribution(spark, tmp_path):
     assert exact.count() == batch.count() > 0
     assert exact.exceptAll(batch).count() == 0
 
+    # over a hierarchical index the stream join reads the levels off
+    # the index, as the batch join does, and refines to the same rows
+    hier = sj.build_cell_index(spark, testdata.polygons(spark), min_res=3)
+    W.run_to_memory(
+        sj.keep_inside(W.stream_static_cell_join(stream, hier)),
+        "t_pip_stream_hier",
+        str(tmp_path / "ckpt4h"),
+    )
+    exact_hier = spark.table("t_pip_stream_hier").select(*key)
+    assert exact_hier.count() == batch.count()
+    assert exact_hier.exceptAll(batch).count() == 0
+
 
 def test_stream_static_salted_matches_unsalted(spark, tmp_path):
     """The salted stream–static join (hot-cell spreading with the batch
