@@ -12,10 +12,16 @@ parent/child moves are closed-form arithmetic.
 
 Three coordinated implementations, all bit-identical:
 
-- :func:`cell_sql` — one SQL template string valid in BOTH Spark SQL and
-  DuckDB (only ``floor + * | &`` and LEAST/GREATEST, all IEEE-exact),
-  used by Spark via ``F.expr`` and by the DuckDB correctness oracle;
-- :func:`cell_id_np` — the numpy kernel for Arrow/pandas-UDF paths;
+- SQL text built from :func:`grid_xy_sql`, valid in BOTH Spark SQL and
+  DuckDB (only ``floor + * | &`` and LEAST/GREATEST, all IEEE-exact).
+  :func:`cell_sql` is the one-expression form, used by the DuckDB
+  correctness oracles and the kNN grid. Spark's point-scale path
+  (``spatial_join.with_cell``) projects the grid coords ``_ix, _iy``
+  once and interleaves them with the linear-size :func:`morton_bits_sql`
+  (``cell_sql`` copies each grid expression 16 times, and Catalyst
+  re-checks all 4 KB of it in every analysis of a point-op plan);
+- :func:`cell_id_np` — the numpy kernel for Arrow/pandas-UDF paths and
+  the driver-side cell covers;
 - plain-Python helpers (parent/children/neighbors) for tests.
 
 Upstream analog: mapshaper has no cell index — its bbox path index
@@ -63,6 +69,21 @@ def grid_xy_sql(lon: str, lat: str, res: int) -> tuple[str, str]:
 
 def morton_sql(ix: str, iy: str) -> str:
     return f"({_spread_sql(ix)} | ({_spread_sql(iy)} * 2))"
+
+
+def morton_bits_sql(ix: str, iy: str, res: int) -> str:
+    """SQL for the Morton code of the res-``res`` grid coords ``ix, iy``
+    (columns or short expressions; each appears ``res`` times) as a sum
+    of ``2·res`` bit terms: bit b of ix moves to bit 2b, bit b of iy to
+    bit 2b + 1. Every term fits a BIGINT up to :data:`MAX_RES`, so
+    Spark's ANSI overflow check never fires."""
+    if not 0 <= res <= MAX_RES:
+        raise ValueError(f"res must be in [0, {MAX_RES}]")
+    terms = [
+        f"({ix} & {1 << b}) * {1 << b} + ({iy} & {1 << b}) * {1 << (b + 1)}"
+        for b in range(res)
+    ]
+    return f"({' + '.join(terms) or 'CAST(0 AS BIGINT)'})"
 
 
 def cell_sql(lon: str, lat: str, res: int) -> str:

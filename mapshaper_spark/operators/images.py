@@ -11,6 +11,12 @@ Design rules for 100 TB of binary payload:
 - **Arrow batches are size-bounded** (session sets
   ``arrow.maxRecordsPerBatch`` small) so a batch of 64x64 RGB rows stays
   well under executor memory.
+- **Kernels run per size class, not per row.** Each batch's rows are
+  checked one by one (format, payload length), then grouped by
+  ``(w, h)``; each class is gathered into one ``(n, h, w, 3)`` array
+  and hashed, compared and resized in a few numpy calls
+  (:func:`_size_classes`). Integer sums keep the results bit-identical
+  to the per-row form.
 - **fmt='raw'** is fully implemented (uncompressed RGB). Codec formats
   (jpeg/png/webp) are STUBBED: the container has no PIL/cv2, so
   ``decode`` raises NotImplementedError for them behind an import-try —
@@ -45,11 +51,13 @@ def decode(buf: bytes, w: int, h: int, fmt: str) -> np.ndarray:
 
 
 def resize_nearest(px: np.ndarray, w2: int, h2: int) -> np.ndarray:
-    """Nearest-neighbor resize — pure numpy indexing, no codec needed."""
-    h, w = px.shape[:2]
+    """Nearest-neighbor resize of (..., h, w, 3) pixels — pure numpy
+    indexing, no codec needed; leading axes (a batch of one size class)
+    pass through."""
+    h, w = px.shape[-3:-1]
     rows = (np.arange(h2) * h // h2).astype(np.int64)
     cols = (np.arange(w2) * w // w2).astype(np.int64)
-    return px[rows][:, cols]
+    return px[..., rows, :, :][..., cols, :]
 
 
 def quantize(px: np.ndarray, keep_bits: int = 6) -> np.ndarray:
@@ -62,6 +70,75 @@ def quantize(px: np.ndarray, keep_bits: int = 6) -> np.ndarray:
 # ------------------------------------------------------------ map stages ---
 
 
+def _size_classes(pdf: pd.DataFrame):
+    """The rows of one Arrow batch grouped by ``(w, h)``: yields
+    ``(rows, px)`` per size class, ``rows`` the class's positions in the
+    batch and ``px`` its (n, h, w, 3) uint8 pixels, gathered in one
+    buffer join. Every row is checked before any class is gathered, so a
+    bad payload fails loudly and by name: ``decode`` raises
+    NotImplementedError for a format with no codec here (a decoded row
+    joins its class as raw pixels), and a buffer that is not ``w·h·3``
+    bytes raises ValueError naming its ``image_id`` (a short and a long
+    buffer in one class cannot cancel out)."""
+    bufs = pdf["bytes"].to_numpy(dtype=object, copy=True)
+    w = pdf["w"].to_numpy(dtype=np.int64)
+    h = pdf["h"].to_numpy(dtype=np.int64)
+    fmt = pdf["fmt"].to_numpy()
+    for i in np.flatnonzero(fmt != "raw"):
+        bufs[i] = decode(bufs[i], w[i], h[i], fmt[i]).tobytes()
+    sizes = np.fromiter(map(len, bufs), dtype=np.int64, count=len(bufs))
+    bad = np.flatnonzero(sizes != w * h * 3)
+    if bad.size:
+        i = bad[0]
+        raise ValueError(
+            f"{pdf['image_id'].iat[i]}: {sizes[i]} payload bytes, want w*h*3 = "
+            f"{w[i] * h[i] * 3} for w={w[i]}, h={h[i]} ({bad.size} bad rows in the batch)"
+        )
+    _, cls = np.unique(w << 32 | h, return_inverse=True)
+    for k in range(cls.max(initial=-1) + 1):
+        rows = np.flatnonzero(cls == k)
+        px = np.frombuffer(b"".join(bufs[rows]), dtype=np.uint8)
+        yield rows, px.reshape(len(rows), h[rows[0]], w[rows[0]], 3)
+
+
+def _roundtrip_psnr(px: np.ndarray) -> np.ndarray:
+    """``min(geometry.psnr(p, quantize(p)), 1e6)`` of every image ``p``
+    in ``px`` (n, h, w, 3), bit for bit: the errors ``p - quantize(p)``
+    are small integers, so their integer sum of squares is exact and
+    ``sse / size`` is the float64 ``np.mean`` gives. A zero-error image
+    has PSNR inf and clamps to 1e6."""
+    err = (px - quantize(px)).reshape(len(px), -1).astype(np.uint16)  # quantize only clears bits
+    err *= err
+    mse = err.sum(axis=1, dtype=np.uint64) / err.shape[1]
+    with np.errstate(divide="ignore"):
+        return np.minimum(10.0 * np.log10(255.0**2 / mse), 1e6)
+
+
+def _verify_batch(pdf: pd.DataFrame, passthrough: list[str]) -> pd.DataFrame:
+    """The :func:`verify_invariants` frame of one Arrow batch: aHash,
+    PSNR and the phash compare run once per size class
+    (:func:`_size_classes`), caption equality per row."""
+    phash_ok = np.zeros(len(pdf), dtype=bool)
+    psnr_db = np.zeros(len(pdf))
+    phash = pdf["phash"].to_numpy()
+    for rows, px in _size_classes(pdf):
+        phash_ok[rows] = fixtures.ahash64_many(px) == phash[rows]
+        psnr_db[rows] = _roundtrip_psnr(px)
+    caption_ok = np.array(
+        [c == fixtures.make_caption(int(i[3:])) for i, c in zip(pdf["image_id"], pdf["caption"])],
+        dtype=bool,
+    )
+    res = pd.DataFrame({
+        "image_id": pdf["image_id"].to_numpy(),
+        "phash_ok": phash_ok,
+        "psnr_db": psnr_db,
+        "caption_ok": caption_ok,
+    })
+    for c in passthrough:
+        res[c] = pdf[c].to_numpy()
+    return res
+
+
 def verify_invariants(images: DataFrame, passthrough: list[str] | None = None) -> DataFrame:
     """Per-row invariant check [north_rule]: recomputed phash equals the
     stored phash; decoded pixels round-trip the lossy stand-in at
@@ -69,34 +146,20 @@ def verify_invariants(images: DataFrame, passthrough: list[str] | None = None) -
     caption. Map-only; returns slim (image_id, phash_ok, psnr_db,
     caption_ok [, passthrough...]).
 
+    Each Arrow batch is checked one ``(w, h)`` size class at a time
+    (:func:`_verify_batch`), not one row at a time: about 20 small numpy
+    calls per image became a few per class (perfbench's 12k images, no
+    Spark: 1.25 s per row against 0.27 s per size class, equal frames).
+
     ``passthrough`` carries slim columns (e.g. lon/lat) through the map
     stage so downstream spatial ops need NO re-join back to the payload
     table — one pass over bytes, zero shuffles of anything image-sized.
     """
     passthrough = passthrough or []
-    base = ["image_id", "phash_ok", "psnr_db", "caption_ok"]
 
     def run(it):
         for pdf in it:
-            out = []
-            for img_id, buf, w, h, fmt, caption, phash in zip(
-                pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"],
-                pdf["fmt"], pdf["caption"], pdf["phash"],
-            ):
-                px = decode(buf, w, h, fmt)
-                ph = int(fixtures.ahash64(px, w, h))
-                p = geometry.psnr(px, quantize(px))
-                i = int(img_id[3:])
-                out.append((
-                    img_id,
-                    ph == int(phash),
-                    float(min(p, 1e6)),
-                    caption == fixtures.make_caption(i),
-                ))
-            res = pd.DataFrame(out, columns=base)
-            for c in passthrough:
-                res[c] = pdf[c].to_numpy()
-            yield res
+            yield _verify_batch(pdf, passthrough)
 
     extra = "".join(
         f", {f.name} {f.dataType.simpleString()}"
@@ -110,18 +173,18 @@ def verify_invariants(images: DataFrame, passthrough: list[str] | None = None) -
 
 
 def thumbnails(images: DataFrame, size: int = 8) -> DataFrame:
-    """Map-only thumbnail stage: (image_id, thumb binary, tw, th)."""
+    """Map-only thumbnail stage: (image_id, thumb binary, tw, th), one
+    :func:`resize_nearest` per size class of each Arrow batch."""
 
     def run(it):
         for pdf in it:
-            out = []
-            for img_id, buf, w, h, fmt in zip(
-                pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"]
-            ):
-                px = decode(buf, w, h, fmt)
-                t = resize_nearest(px, size, size)
-                out.append({"image_id": img_id, "thumb": t.tobytes(), "tw": size, "th": size})
-            yield pd.DataFrame(out, columns=["image_id", "thumb", "tw", "th"])
+            thumbs = np.empty(len(pdf), dtype=object)
+            for rows, px in _size_classes(pdf):
+                for r, t in zip(rows, resize_nearest(px, size, size)):
+                    thumbs[r] = t.tobytes()
+            yield pd.DataFrame(
+                {"image_id": pdf["image_id"].to_numpy(), "thumb": thumbs, "tw": size, "th": size}
+            )
 
     return images.mapInPandas(run, schema="image_id string, thumb binary, tw int, th int")
 

@@ -184,3 +184,37 @@ def test_short_rings_padded_with_edge_zero(spark):
         e = j if j < 3 else 0
         want = (nxt[e, 0] - ring[e, 0], nxt[e, 1] - ring[e, 1], ring[e, 0], ring[e, 1])
         assert tuple(row[f"{c}{j}"] for c in ("_hdx", "_hdy", "_hx", "_hy")) == want
+
+
+def test_cell_ids_match_cell_sql_at_every_level(spark):
+    """``with_cell`` at every res 0..MAX_RES, and the one-row-per-level
+    explode over all of them, give ``cells.cell_sql``'s ids in Spark, on
+    poles, ±180, cell edges, NaN, ±inf and out-of-range inputs; on
+    finite inputs they also equal ``cells.cell_id_np``."""
+    import pyarrow as pa
+
+    edge = [0.0, -0.0, 90.0, -90.0, 180.0, -180.0, 179.99999999999997, -179.99999999999997,
+            1e-300, 5e-324, 200.0, -1000.0, 1e300, -1e300, np.nan, np.inf, -np.inf]
+    lon = np.r_[np.repeat(edge, len(edge)), np.random.default_rng(3).uniform(-181, 181, 200),
+                -180.0 + np.arange(40) * 360.0 / (1 << cells.MAX_RES)]
+    lat = np.r_[np.tile(edge, len(edge)), np.random.default_rng(4).uniform(-91, 91, 200),
+                -90.0 + np.arange(40) * 180.0 / (1 << cells.MAX_RES)]
+    df = spark.createDataFrame(pa.table({"i": np.arange(len(lon)), "x": lon, "y": lat}))
+    levels = range(cells.MAX_RES + 1)
+    for r in levels:
+        df = sj.with_cell(df, r, lon="x", lat="y").withColumnRenamed("cell_id", f"c{r}")
+    want = [F.expr(cells.cell_sql("x", "y", r)).alias(f"w{r}") for r in levels]
+    df = df.select("*", *want).withColumnRenamed("x", "lon").withColumnRenamed("y", "lat")
+    got = sj._with_cells(df, levels).toPandas().sort_values(["i", "cell_id"])
+    per_point = got.drop_duplicates("i")
+    assert len(per_point) == len(lon) and len(got) == len(lon) * len(levels)
+    finite = np.isfinite(per_point["lon"]) & np.isfinite(per_point["lat"])
+    for r in levels:
+        assert (per_point[f"c{r}"] == per_point[f"w{r}"]).all(), r
+        np_ids = cells.cell_id_np(per_point["lon"][finite].to_numpy(), per_point["lat"][finite].to_numpy(), r)
+        assert (per_point[f"c{r}"][finite].to_numpy() == np_ids).all(), r
+    # the explode gives each point its id at every level, once
+    res = got["cell_id"].to_numpy() & 31
+    want_ids = np.choose(res, [got[f"w{r}"].to_numpy() for r in levels])
+    assert (got["cell_id"].to_numpy() == want_ids).all()
+    assert (got.groupby("i")["cell_id"].nunique() == len(levels)).all()

@@ -20,13 +20,26 @@ def test_invariants_all_pass(spark):
     assert min(r["psnr_db"] for r in rows) >= 40.0, "lossy roundtrip below 40dB"
 
 
+def _zero_error_row(i: int) -> dict:
+    """Image row ``i`` with its pixels' two low bits cleared: the lossy
+    stand-in round-trips it exactly, so its PSNR is inf."""
+    r = fixtures.make_image(i)
+    px = np.frombuffer(r["bytes"], dtype=np.uint8).reshape(r["h"], r["w"], 3) & 0xFC
+    lon, lat = fixtures.image_lonlat(i)
+    return {**r, "bytes": px.tobytes(), "phash": int(fixtures.ahash64(px, r["w"], r["h"])), "lon": lon, "lat": lat}
+
+
 def test_verify_invariants_matches_per_row_reference(spark):
-    """Whole-column passthrough gives the frame a per-row loop builds:
-    same rows, values and dtypes (passthrough columns come out in the
-    input schema's order)."""
+    """The size-class kernel gives exactly the frame a per-row loop
+    builds: same rows, values and dtypes (passthrough columns come out
+    in the input schema's order). Each 16-row batch holds several
+    (w, h) classes; one image has zero round-trip error (PSNR inf,
+    clamped to 1e6); one partition is empty."""
     import pandas as pd
 
-    imgs = fixtures.images_df(spark, 48, partitions=3)
+    gen = fixtures.images_df(spark, 48, partitions=3)
+    extra = spark.createDataFrame(pd.DataFrame([_zero_error_row(48)]), schema=gen.schema)
+    imgs = gen.unionByName(extra).unionByName(spark.createDataFrame([], gen.schema))
     got = (
         images_op.verify_invariants(imgs, passthrough=["lon", "lat", "w"])
         .toPandas().sort_values("image_id").reset_index(drop=True)
@@ -45,7 +58,33 @@ def test_verify_invariants_matches_per_row_reference(spark):
             "lat": r["lat"],
         })
     want = pd.DataFrame(rows).astype({"w": "int32"})
-    pd.testing.assert_frame_equal(got, want)
+    pd.testing.assert_frame_equal(got, want, check_exact=True)
+    assert len(got) == 49 and got["psnr_db"].iloc[-1] == 1e6
+    assert got[["phash_ok", "caption_ok"]].all().all()
+    # an empty Arrow batch keeps the output dtypes
+    empty = images_op._verify_batch(imgs.limit(0).toPandas(), ["lon"])
+    assert empty.dtypes.astype(str).tolist() == ["object", "bool", "float64", "bool", "float64"]
+
+
+def test_verify_rejects_bad_payloads_per_row(spark):
+    """Each row is checked before its size class is gathered: a codec
+    format still raises through ``decode``, and a buffer that is not
+    w*h*3 bytes raises naming its image_id, even when a short and a long
+    buffer in one class add up to the right total."""
+    import pandas as pd
+
+    good = [fixtures.make_image(i) for i in (0, 9)]  # both 16x16
+    short, long = dict(good[0]), dict(good[1])
+    short["bytes"], long["bytes"] = short["bytes"][:-3], long["bytes"] + b"\0\0\0"
+    schema = "image_id string, bytes binary, w int, h int, fmt string, caption string, phash long"
+    bad = spark.createDataFrame(pd.DataFrame([short, long]), schema=schema).coalesce(1)
+    with pytest.raises(Exception, match="img000000000: 765 payload bytes"):
+        images_op.verify_invariants(bad).collect()
+    with pytest.raises(ValueError, match="img000000009"):
+        images_op._verify_batch(pd.DataFrame([good[0], long]), [])
+    with pytest.raises(NotImplementedError):
+        images_op._verify_batch(pd.DataFrame([good[0], {**good[1], "fmt": "jpeg"}]), [])
+    assert images_op._verify_batch(pd.DataFrame(good), [])["phash_ok"].all()
 
 
 def test_thumbnails_shape_and_determinism(spark):

@@ -239,26 +239,33 @@ def _ahash64_shift_loop(px, w, h):
 
 
 def test_ahash64_matches_shift_loop():
-    """The packbits word is bit-identical to the shift loop on every
-    (w, h) size class: random images (about half set the sign bit), a
-    flat image (all bits 0) and a one-bright-block image (bit 63 only,
-    the most negative hash)."""
+    """The packbits words are bit-identical to the shift loop on every
+    (w, h) size class plus one size that is not a multiple of 8, one
+    image at a time (``ahash64``) and as one batch (``ahash64_many``):
+    random images (about half set the sign bit), a flat image (all bits
+    0) and a one-bright-block image (bit 63 only, the most negative
+    hash)."""
     rng = np.random.default_rng(5)
     signs = set()
-    for w in fixtures.IMG_SIZES:
-        for h in fixtures.IMG_SIZES:
-            flat = np.full((h, w, 3), 77, dtype=np.uint8)
-            corner = np.zeros((h, w, 3), dtype=np.uint8)
-            corner[: h // 8, : w // 8] = 255
-            imgs = [flat, corner] + [rng.integers(0, 256, (h, w, 3), dtype=np.uint8) for _ in range(40)]
-            for px in imgs:
-                got = fixtures.ahash64(px, w, h)
-                assert type(got) is np.int64
-                assert got == _ahash64_shift_loop(px, w, h)
-                signs.add(bool(got < 0))
-            assert fixtures.ahash64(flat, w, h) == 0
-            assert fixtures.ahash64(corner, w, h) == np.iinfo(np.int64).min
+    sizes = [(w, h) for w in fixtures.IMG_SIZES for h in fixtures.IMG_SIZES] + [(20, 13)]
+    for w, h in sizes:
+        flat = np.full((h, w, 3), 77, dtype=np.uint8)
+        corner = np.zeros((h, w, 3), dtype=np.uint8)
+        corner[: h // 8, : w // 8] = 255
+        imgs = [flat, corner] + [rng.integers(0, 256, (h, w, 3), dtype=np.uint8) for _ in range(40)]
+        want = [_ahash64_shift_loop(px, w, h) for px in imgs]
+        for px, ref in zip(imgs, want):
+            got = fixtures.ahash64(px, w, h)
+            assert type(got) is np.int64
+            assert got == ref
+            signs.add(bool(got < 0))
+        many = fixtures.ahash64_many(np.stack(imgs))
+        assert many.dtype == np.int64 and many.shape == (len(imgs),)
+        assert many.tolist() == [int(v) for v in want]
+        assert fixtures.ahash64(flat, w, h) == 0
+        assert fixtures.ahash64(corner, w, h) == np.iinfo(np.int64).min
     assert signs == {True, False}
+    assert fixtures.ahash64_many(np.zeros((0, 16, 16, 3), dtype=np.uint8)).shape == (0,)
 
 
 def test_psnr_quantization_above_40db():
