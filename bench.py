@@ -39,13 +39,11 @@ IMAGES_PATH = os.environ.get(
 
 # per-query bench subset: the graded operator families
 BENCH_QUERIES = [
-    "pip_count_by_polygon",
     "pip_attribute_rows",
     "clip_points",
     "knn_nearest_target",
     "knn3_nearest_targets",
     "tile_assign_counts",
-    "dissolve_grid",
     "calc_pricing_summary",
     "join_attr_region",
     "topk_orders_per_customer",
@@ -59,7 +57,7 @@ BENCH_QUERIES = [
     "text_quality",
     "pip_count_salted",
     "raster_tile_pixel_counts",
-    "simplify_visvalingam_counts",
+    "simplify_weighted_counts",
     "simhash16_docs",
     "jaccard_ngram_pairs",
     "subdivide_hot_cells",
@@ -75,7 +73,6 @@ BENCH_QUERIES = [
     "dissolve_sum_fields",
     "clip_general_area_windows",
     "calc_mode_collect",
-    "tile_assign_webmercator",
     "gh_boolean_pair_areas",
     "gh_boolean_holed_pairs",
     "clip_concave_pairs_area",
@@ -90,8 +87,6 @@ BENCH_QUERIES = [
     "video_frame_stats",
     # round-3 additions
     "polygons_from_lines_grid",
-    "mosaic_faces_overlap_layer",
-    "clean_overlap_assignment",
     "events_sliding_window",
     "graticule_lines",
     "shape_coordinates",

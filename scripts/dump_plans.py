@@ -16,9 +16,7 @@ from mapshaper_spark import queries as Q  # noqa: E402
 from mapshaper_spark.session import get_spark  # noqa: E402
 
 NAMES = (
-    "pip_count_by_polygon",
     "pip_count_salted",
-    "pip_count_hier",
     "pip_holes_rows",
     "knn_nearest_target",
     "asof_last_purchase_before_click",
@@ -32,7 +30,6 @@ NAMES = (
     "polygons_from_lines_grid",
     "topojson_tiled_counts",
     "topojson_tiled_import_stats",
-    "export_svg_paths",
     "dissolve2_rings_tiled",
     "mosaic_rings_tiled",
     "clean_rings_tiled",
@@ -49,7 +46,6 @@ NAMES = (
     "points_midpoints",
     "points_interpolated",
     "source_quality_gate",
-    "rotate_world_roundtrip",
     "paragraph_dedup_refinedweb",
     "decontaminate_eval_overlap",
     "seqpack_offsets",

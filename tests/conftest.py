@@ -7,7 +7,7 @@ import pytest
 def spark():
     from mapshaper_spark.session import get_spark
 
-    s = get_spark("mapshaper_spark_tests", cpus=8, shuffle_partitions=8)
+    s = get_spark("mapshaper_spark_tests", shuffle_partitions=8)
     yield s
 
 

@@ -42,3 +42,16 @@ def test_no_join_takes_levels_beside_an_index():
             if {"res", "min_res"} & set(params):
                 bad.append(f"{name}.{fname}")
     assert joins >= 8 and not bad, (joins, bad)
+
+
+def test_every_query_is_checked():
+    """A registered query either has a DuckDB oracle or a test that looks
+    it up in ``QUERIES`` by its literal name; an entry nothing checks is
+    dead surface and stays deleted."""
+    from mapshaper_spark import queries as Q
+
+    pat = re.compile(r"""QUERIES\[["']([^"']+)["']\]""")
+    tests = pathlib.Path(__file__).resolve().parent
+    called = {m for path in tests.rglob("*.py") for m in pat.findall(path.read_text())}
+    unchecked = sorted(set(Q.QUERIES) - set(Q.ORACLES) - called)
+    assert not unchecked, unchecked

@@ -420,7 +420,7 @@ def test_mosaic_faces_matches_interval_algebra(boxes):
     from mapshaper_spark.session import get_spark
     import pandas as pd
 
-    spark = get_spark("mapshaper_spark_tests", cpus=8, shuffle_partitions=8)
+    spark = get_spark("mapshaper_spark_tests", shuffle_partitions=8)
     pdf = pd.DataFrame(
         [
             {
@@ -456,7 +456,7 @@ def _boxes_feats_df(boxes):
     from mapshaper_spark.session import get_spark
     import pandas as pd
 
-    spark = get_spark("mapshaper_spark_tests", cpus=8, shuffle_partitions=8)
+    spark = get_spark("mapshaper_spark_tests", shuffle_partitions=8)
     pdf = pd.DataFrame(
         [
             {
@@ -547,7 +547,7 @@ def test_inlay_matches_interval_algebra(boxes):
     from mapshaper_spark.session import get_spark
     import pandas as pd
 
-    spark = get_spark("mapshaper_spark_tests", cpus=8, shuffle_partitions=8)
+    spark = get_spark("mapshaper_spark_tests", shuffle_partitions=8)
     tx, ty, ts = boxes[0]
     a_feats = spark.createDataFrame(
         pd.DataFrame(
@@ -790,7 +790,7 @@ def test_mixed_box_star_emitters_match_global():
     from mapshaper_spark.session import get_spark
     import pandas as pd
 
-    spark = get_spark("mapshaper_spark_tests", cpus=8, shuffle_partitions=8)
+    spark = get_spark("mapshaper_spark_tests", shuffle_partitions=8)
     by_fid = {
         0: np.array([[-3.0, -3.0], [1.0, -3.0], [1.0, 2.0], [-3.0, 2.0]]),
         1: np.array([[1.2, 0.3], [4.3, 0.3], [4.3, 2.5], [1.2, 2.5]]),
@@ -875,7 +875,7 @@ def test_vertex_touching_stars_tiled_measure_matches_global():
     from mapshaper_spark.session import get_spark
     import pandas as pd
 
-    spark = get_spark("mapshaper_spark_tests", cpus=8, shuffle_partitions=8)
+    spark = get_spark("mapshaper_spark_tests", shuffle_partitions=8)
     a = _star(5, 4.0, 1.5, 0.0, 0.0, 0.3)
     b = _star(6, 3.0, 1.2, 0.0, 0.0, 1.1)
     # (b - b[2]) zeroes vertex 2 exactly; + a[0] lands it bitwise on
@@ -943,7 +943,7 @@ def test_shared_edge_run_tiled_area_canonical():
     from mapshaper_spark.session import get_spark
     import pandas as pd
 
-    spark = get_spark("mapshaper_spark_tests", cpus=8, shuffle_partitions=8)
+    spark = get_spark("mapshaper_spark_tests", shuffle_partitions=8)
     x0, y0, w, h = -2.25, -1.5, 3.5, 4.0
     x1 = x0 + w
     yb, wb, hb = 0.3, 2.75, 3.25  # B's left edge sits EXACTLY on x=x1
@@ -1124,7 +1124,7 @@ def _gap_frame_feats(p):
             for i, ring in enumerate(rings)
         ]
     )
-    spark = get_spark("mapshaper_spark_tests", cpus=8, shuffle_partitions=8)
+    spark = get_spark("mapshaper_spark_tests", shuffle_partitions=8)
     feats = spark.createDataFrame(
         pdf, schema="feature_id int, key string, xs array<double>, ys array<double>"
     )
@@ -1213,7 +1213,7 @@ def test_convex_pip_filter_matches_pip_convex(p):
     with np.errstate(invalid="ignore"):  # inf - inf in the numpy reference
         want = full | np.column_stack([G.pip_convex(px, py, rings[q]) for q in pids])
 
-    spark = get_spark("mapshaper_spark_tests", cpus=8, shuffle_partitions=8)
+    spark = get_spark("mapshaper_spark_tests", shuffle_partitions=8)
     # one candidate row per (point, polygon), edges gathered by polygon
     pt, pi = np.divmod(np.arange(full.size), len(pids))
     with_e = sj._local_frame(
