@@ -189,6 +189,13 @@ def thumbnails(images: DataFrame, size: int = 8) -> DataFrame:
     return images.mapInPandas(run, schema="image_id string, thumb binary, tw int, th int")
 
 
+def _concat_columns(parts: list[dict], cols: list[str]) -> pd.DataFrame:
+    """One frame of ``cols`` from per-payload column arrays, in order."""
+    if not parts:
+        return pd.DataFrame(columns=cols)
+    return pd.DataFrame({c: np.concatenate([p[c] for p in parts]) for c in cols})
+
+
 def frame_sample(videos: DataFrame, every_k: int = 2) -> DataFrame:
     """Video frame sampling [task brief: multimodal frame-sample]: the
     payload is a raw concatenated-RGB container (n_frames · w·h·3
@@ -201,39 +208,36 @@ def frame_sample(videos: DataFrame, every_k: int = 2) -> DataFrame:
     Input: (video_id, bytes, w, h, fmt). Output: (video_id, frame_idx,
     mean_r, mean_g, mean_b, frame_phash)."""
 
+    cols = ["video_id", "frame_idx", "mean_r", "mean_g", "mean_b", "frame_phash"]
+
+    def sample(vid, buf, w, h):
+        """One video's output columns: its frames as one (n_frames, h, w,
+        3) array, every k-th taken. The uint8 sums are integers below
+        2^53, so the means equal a per-frame ``mean`` bit for bit."""
+        fsz = w * h * 3
+        n = len(buf) // fsz
+        px = np.frombuffer(buf, dtype=np.uint8, count=n * fsz).reshape(n, h, w, 3)[::every_k]
+        means = px.reshape(len(px), -1, 3).mean(axis=1)
+        return {
+            "video_id": np.full(len(px), vid, dtype=object),
+            "frame_idx": np.arange(0, n, every_k, dtype=np.int32),
+            "mean_r": means[:, 0],
+            "mean_g": means[:, 1],
+            "mean_b": means[:, 2],
+            "frame_phash": fixtures.ahash64_many(px),
+        }
+
     def run(it):
         for pdf in it:
-            out = []
-            for _, r in pdf.iterrows():
-                if r["fmt"] != "raw":
-                    raise NotImplementedError(
-                        "video codecs absent in this environment; raw container only"
-                    )
-                w, h = int(r["w"]), int(r["h"])
-                fsz = w * h * 3
-                buf = r["bytes"]
-                n_frames = len(buf) // fsz
-                for fi in range(0, n_frames, every_k):
-                    px = np.frombuffer(
-                        buf[fi * fsz : (fi + 1) * fsz], dtype=np.uint8
-                    ).reshape(h, w, 3)
-                    means = px.reshape(-1, 3).mean(axis=0)
-                    out.append(
-                        {
-                            "video_id": r["video_id"],
-                            "frame_idx": fi,
-                            "mean_r": float(means[0]),
-                            "mean_g": float(means[1]),
-                            "mean_b": float(means[2]),
-                            "frame_phash": int(fixtures.ahash64(px, w, h)),
-                        }
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "video_id", "frame_idx", "mean_r", "mean_g", "mean_b", "frame_phash",
-                ],
-            )
+            if (pdf["fmt"] != "raw").any():
+                raise NotImplementedError(
+                    "video codecs absent in this environment; raw container only"
+                )
+            parts = [
+                sample(v, b, int(w), int(h))
+                for v, b, w, h in zip(pdf["video_id"], pdf["bytes"], pdf["w"], pdf["h"])
+            ]
+            yield _concat_columns(parts, cols)
 
     return videos.mapInPandas(
         run,
@@ -255,31 +259,31 @@ def audio_features(audios: DataFrame, frame: int = 1024) -> DataFrame:
     Input: (audio_id, bytes, fmt). Output: (audio_id, window_idx, rms,
     zero_crossings)."""
 
+    cols = ["audio_id", "window_idx", "rms", "zero_crossings"]
+
+    def windows(aid, buf):
+        """One clip's output columns: its samples as one (n_win, frame)
+        int64 array; the sums of squares are exact integers, so each RMS
+        is the per-window ``sqrt(float(sum) / frame)`` bit for bit."""
+        samples = np.frombuffer(buf, dtype="<i2")
+        n_win = len(samples) // frame
+        w = samples[: n_win * frame].astype(np.int64).reshape(n_win, frame)
+        neg = w < 0
+        return {
+            "audio_id": np.full(n_win, aid, dtype=object),
+            "window_idx": np.arange(n_win, dtype=np.int32),
+            "rms": np.sqrt((w * w).sum(axis=1).astype(np.float64) / frame),
+            "zero_crossings": (neg[:, :-1] != neg[:, 1:]).sum(axis=1, dtype=np.int64),
+        }
+
     def run(it):
         for pdf in it:
-            out = []
-            for _, r in pdf.iterrows():
-                if r["fmt"] != "pcm16":
-                    raise NotImplementedError(
-                        "audio codecs absent in this environment; pcm16 only"
-                    )
-                samples = np.frombuffer(r["bytes"], dtype="<i2")
-                n_win = len(samples) // frame
-                for wi in range(n_win):
-                    w = samples[wi * frame : (wi + 1) * frame].astype(np.int64)
-                    rms = float(np.sqrt(float((w * w).sum()) / frame))
-                    zc = int(((w[:-1] < 0) != (w[1:] < 0)).sum())
-                    out.append(
-                        {
-                            "audio_id": r["audio_id"],
-                            "window_idx": wi,
-                            "rms": rms,
-                            "zero_crossings": zc,
-                        }
-                    )
-            yield pd.DataFrame(
-                out, columns=["audio_id", "window_idx", "rms", "zero_crossings"]
-            )
+            if (pdf["fmt"] != "pcm16").any():
+                raise NotImplementedError(
+                    "audio codecs absent in this environment; pcm16 only"
+                )
+            parts = [windows(a, b) for a, b in zip(pdf["audio_id"], pdf["bytes"])]
+            yield _concat_columns(parts, cols)
 
     return audios.mapInPandas(
         run,

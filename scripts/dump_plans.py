@@ -3,7 +3,7 @@
 
 ``python scripts/dump_plans.py`` rewrites the whole file;
 ``python scripts/dump_plans.py NAME ...`` regenerates only those
-sections in place."""
+sections in place, appending a section the file does not have yet."""
 
 from __future__ import annotations
 
@@ -13,7 +13,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from mapshaper_spark import queries as Q  # noqa: E402
-from mapshaper_spark.session import get_spark  # noqa: E402
+from mapshaper_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
 
 NAMES = (
     "pip_count_salted",
@@ -59,6 +59,7 @@ NAMES = (
     "bpe_apply_merges",
     "tfidf_top_terms",
     "url_dedup_canonical",
+    "pip_attribute_rows",
 )
 
 
@@ -67,10 +68,10 @@ def main(names: tuple[str, ...] = NAMES) -> None:
     unknown = set(names) - set(NAMES)
     if unknown:
         raise SystemExit(f"not in NAMES: {sorted(unknown)}")
-    spark = get_spark("plans", cpus=8, shuffle_partitions=8)
+    spark = get_spark("plans", cpus=DEFAULT_CPUS, shuffle_partitions=8)
     sf = "/root/testdata/sf0.01"
     out = [
-        "# PLANS — physical plans of the graded core (sf0.01, local[8])",
+        f"# PLANS — physical plans of the graded core (sf0.01, local[{DEFAULT_CPUS}])",
         "",
         "Generated with `.explain('formatted')`; regenerate with",
         "`python scripts/dump_plans.py`. What to check: PushedFilters +",
@@ -98,12 +99,16 @@ def main(names: tuple[str, ...] = NAMES) -> None:
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     path = os.path.join(root, "PLANS.md")
     if names != NAMES:
-        # splice the named sections into the existing file, keep the rest
+        # splice the named sections into the existing file, keep the
+        # rest; a section the file lacks goes at the end
         with open(path) as f:
             text = f.read()
         for name, sec in sections.items():
             head = f"\n## {name}\n"
-            start = text.index(head)
+            start = text.find(head)
+            if start < 0:
+                text = text.rstrip("\n") + "\n" + sec + "\n"
+                continue
             end = text.find("\n## ", start + len(head))
             text = text[:start] + sec + "\n" + (text[end:] if end >= 0 else "")
         with open(path, "w") as f:

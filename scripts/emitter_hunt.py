@@ -36,7 +36,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import numpy as np  # noqa: E402
 import pandas as pd  # noqa: E402
 
-from mapshaper_spark.session import get_spark  # noqa: E402
+from mapshaper_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
 from mapshaper_spark.operators import overlay as overlay_op  # noqa: E402
 
 
@@ -91,7 +91,7 @@ def main() -> None:
     n_layers = int(sys.argv[1]) if len(sys.argv) > 1 else 40
     seed = int(sys.argv[2]) if len(sys.argv) > 2 else 20260818
     rng = np.random.RandomState(seed)
-    spark = get_spark("emitter_hunt", cpus=8, shuffle_partitions=8)
+    spark = get_spark("emitter_hunt", cpus=DEFAULT_CPUS, shuffle_partitions=8)
     fails = 0
     for li in range(n_layers):
         boxes = sample_layer(rng)
@@ -181,7 +181,7 @@ def buffer_hunt(n_layers: int, seed: int) -> int:
     from mapshaper_spark.operators import overlay as ov
     from mapshaper_spark.operators import points as points_op
 
-    spark = get_spark("emitter_hunt", cpus=8, shuffle_partitions=8)
+    spark = get_spark("emitter_hunt", cpus=DEFAULT_CPUS, shuffle_partitions=8)
     fails = 0
     for li in range(n_layers):
         rng = np.random.RandomState(seed + li)
@@ -455,7 +455,7 @@ def star_hunt(n_layers: int, seed: int) -> int:
     tiled emitters must reproduce ring count, sorted signed areas, and
     total perimeter per key / signature."""
     rng = np.random.RandomState(seed)
-    spark = get_spark("emitter_hunt", cpus=8, shuffle_partitions=8)
+    spark = get_spark("emitter_hunt", cpus=DEFAULT_CPUS, shuffle_partitions=8)
     fails = 0
     for li in range(n_layers):
         nf = rng.randint(2, 6)
@@ -496,7 +496,7 @@ def mixed_hunt(n_layers: int, seed: int) -> int:
     folds via :func:`_check_layer_vs_global` (all three emitters,
     clean included)."""
     rng = np.random.RandomState(seed)
-    spark = get_spark("emitter_hunt", cpus=8, shuffle_partitions=8)
+    spark = get_spark("emitter_hunt", cpus=DEFAULT_CPUS, shuffle_partitions=8)
     fails = 0
     for li in range(n_layers):
         nf = rng.randint(3, 7)
@@ -578,7 +578,7 @@ def touch_hunt(n_layers: int, seed: int) -> int:
     not comparable — total area/perimeter per key and floor-filtered
     per-signature areas are."""
     rng = np.random.RandomState(seed)
-    spark = get_spark("emitter_hunt", cpus=8, shuffle_partitions=8)
+    spark = get_spark("emitter_hunt", cpus=DEFAULT_CPUS, shuffle_partitions=8)
     fails = raises = 0
     for li in range(n_layers):
         off = float(rng.choice([0.0, 2.0e6]))
@@ -658,7 +658,7 @@ def adjacency_hunt(n_layers: int, seed: int) -> int:
     counts separately; the finding would be a SILENT measure
     divergence."""
     rng = np.random.RandomState(seed)
-    spark = get_spark("emitter_hunt", cpus=8, shuffle_partitions=8)
+    spark = get_spark("emitter_hunt", cpus=DEFAULT_CPUS, shuffle_partitions=8)
     fails = raises = 0
     for li in range(n_layers):
         off = float(rng.choice([0.0, 2.0e6]))

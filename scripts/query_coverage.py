@@ -28,7 +28,6 @@ Run: ``python scripts/query_coverage.py [--sf DIR]`` (about a minute at sf0.01 o
 from __future__ import annotations
 
 import argparse
-import os
 import pathlib
 import re
 import sys
@@ -37,9 +36,6 @@ import time
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(ROOT))
-os.environ["PYTHONPATH"] = os.pathsep.join(  # Python workers import the package
-    p for p in (str(ROOT), os.environ.get("PYTHONPATH")) if p
-)
 
 from mapshaper_spark import queries as Q  # noqa: E402
 from mapshaper_spark.session import get_spark  # noqa: E402

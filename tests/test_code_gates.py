@@ -2,10 +2,12 @@
 
 from __future__ import annotations
 
+import ast
 import importlib
 import inspect
 import pathlib
 import re
+import sys
 
 _PKG = pathlib.Path(__file__).resolve().parent.parent / "mapshaper_spark"
 
@@ -55,3 +57,22 @@ def test_every_query_is_checked():
     called = {m for path in tests.rglob("*.py") for m in pat.findall(path.read_text())}
     unchecked = sorted(set(Q.QUERIES) - set(Q.ORACLES) - called)
     assert not unchecked, unchecked
+
+
+def test_worker_daemon_imports_only_stdlib_first():
+    """``python -m mapshaper_spark._worker_daemon`` runs the package
+    ``__init__`` and then the module before the module strips the
+    archive entries from ``sys.path``: an import of pyspark (or of any
+    engine module) there would load it from the zip the strip removes.
+    ``__init__`` imports nothing; the daemon module's top-level imports
+    are stdlib."""
+    init = ast.parse((_PKG / "__init__.py").read_text())
+    assert not [n for n in ast.walk(init) if isinstance(n, (ast.Import, ast.ImportFrom))]
+    daemon = ast.parse((_PKG / "_worker_daemon.py").read_text())
+    top = [
+        a.name if isinstance(n, ast.Import) else n.module
+        for n in daemon.body
+        if isinstance(n, (ast.Import, ast.ImportFrom))
+        for a in n.names
+    ]
+    assert top and all(m.split(".")[0] in sys.stdlib_module_names for m in top), top
